@@ -65,14 +65,11 @@ object C {
     */
   def reclaimBlocks(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.catalog.clearCache()
-    // the BPE chain memo and the dedup cluster-chain memo are the TWO
-    // sanctioned cross-query materializations (bpe_train/bpe_encode share
-    // the trained chain; the five cluster-family queries share the pair +
-    // component relations) — unpersisting a localCheckpoint is
-    // unrecoverable, so skip the memos' pinned ids; everything else is
-    // per-query garbage
-    val keep = graft.pipeline.TextAnalysis.bpeMemoProtectedRddIds(spark) ++
-      graft.pipeline.Dedup.clusterMemoProtectedRddIds(spark)
+    // the BPE chain memo is the ONE sanctioned cross-query
+    // materialization (bpe_train/bpe_encode share the trained chain) —
+    // unpersisting a localCheckpoint is unrecoverable, so skip the memo's
+    // pinned ids; everything else is per-query garbage
+    val keep = graft.pipeline.TextAnalysis.bpeMemoProtectedRddIds(spark)
     spark.sparkContext.getPersistentRDDs
       .foreach { case (id, rdd) => if (!keep.contains(id)) rdd.unpersist(blocking = true) }
     System.gc()

@@ -285,166 +285,57 @@ object Dedup {
     cross.union(within)
   }
 
-  /** The ≥-threshold pair view over the memoized verified-candidate
-    * checkpoint — a filter on an ExistingRDD scan, free on a warm memo. */
+  /** The eager-checkpointed UNthresholded [[minhashVerifiedPairs]] — the
+    * verified candidate set (already bounded by the band caps) that every
+    * cluster-family consumer filters with a cheap scan. Each query builds
+    * its own; the blocks are released by the ContextCleaner when the
+    * returned plan is dropped.
+    */
+  private def verifiedPairs(documents: DataFrame): DataFrame =
+    minhashVerifiedPairs(documents).localCheckpoint(eager = true)
+
+  /** The ≥-threshold pair view over the verified-candidate checkpoint. */
   private def thresholdedPairs(documents: DataFrame): DataFrame =
-    clusterChain(documents, needComp = false)._1
+    verifiedPairs(documents)
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
 
   def dedupMinhashLsh(documents: DataFrame): DataFrame =
     thresholdedPairs(documents).orderBy(col("doc_a"), col("doc_b"))
 
-  // ---- cluster-chain memo ----
-  //
-  // Eight registered queries consume the SAME MinHash-LSH verified
-  // candidate relation over the same corpus (dedup_minhash_lsh,
-  // dedup_containment, similar_docs, dedup_graph_stats,
-  // dedup_centrality, dedup_recall) and, for several, the SAME connected components
-  // over its thresholded pairs (dedup_clusters, source_dup_rates,
-  // dedup_keep_best via dedupClusters; dedup_centrality again). Like the
-  // BPE chain memo (the one precedent for sanctioned session-lifetime
-  // materialization, [[TextAnalysis.bpeChainMemo]]): the pair build is
-  // the index-construction step a production deployment runs ONCE and
-  // serves many keep-policies from, so recomputing it per query is
-  // harness-shaped waste, not scale realism. The memo pins the
-  // UNthresholded [[minhashVerifiedPairs]] checkpoint (the candidate set
-  // the band caps already bounded — every consumer's filter is a cheap
-  // scan over it) plus, lazily, the components over the ≥-threshold
-  // pairs. Keyed by scan roots + canonicalized-plan hash + per-file
-  // (len, mtime) fingerprint ([[TextAnalysis.planMemoKey]]); one corpus
-  // pinned at a time; in-memory fixture inputs are never memoized.
-  //
-  // INVALIDATE-ON-SWITCH HAZARD (sequential-harness assumption): when a
-  // chain query runs against corpus B, the memo blocking-unpersists corpus
-  // A's localCheckpoint blocks. A lazy DataFrame handed out earlier for
-  // corpus A (any dedup* chain result that was returned but not yet
-  // evaluated) becomes UNEVALUABLE at that point — localCheckpoint
-  // truncates lineage, so there is nothing to recompute from. Every
-  // harness (Verify/Bench/driver) fully materializes each query before
-  // the next starts, so this never fires there; interleaving chain
-  // queries across corpora from user code requires materializing each
-  // result before touching the other corpus.
-
-  private case class ClusterMemoEntry(
-      session: org.apache.spark.sql.SparkSession, key: String,
-      pairs: DataFrame, comp: Option[DataFrame], rddIds: Set[Int])
-
-  private val clusterMemoRef =
-    new java.util.concurrent.atomic.AtomicReference[ClusterMemoEntry](null)
-
-  /** Test hooks: how many times the pair relation / components were
-    * actually computed (memo hits don't increment). */
-  private[graft] val clusterPairBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val clusterCompBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Checkpoint-block RDD ids the harness block-reclaimer must keep —
-    * same session-validity contract as
-    * [[TextAnalysis.bpeMemoProtectedRddIds]]. */
-  def clusterMemoProtectedRddIds(spark: org.apache.spark.sql.SparkSession): Set[Int] =
-    Option(clusterMemoRef.get)
-      .filter(m => (m.session eq spark) && !m.session.sparkContext.isStopped)
-      .map(_.rddIds).getOrElse(Set.empty)
-
-  /** Drop the memo and unpersist its blocks (test/session teardown; also
-    * fired on corpus switch — see the invalidate-on-switch hazard note in
-    * the memo overview above: lazy chain results from the evicted corpus
-    * become unevaluable once their checkpoint blocks are gone). */
-  def clearClusterMemo(): Unit = {
-    val m = clusterMemoRef.getAndSet(null)
-    if (m != null) {
-      val persisted = m.session.sparkContext.getPersistentRDDs
-      m.rddIds.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
-    }
-  }
-
-  /** (verified candidates, components?) for the corpus — memo-backed on
-    * file-scan inputs. `pairs` is the eager-checkpointed UNthresholded
-    * [[minhashVerifiedPairs]]; `comp` (built on first `needComp` request,
-    * then pinned alongside) is the eager-checkpointed
-    * [[Graph.connectedComponents]] over its ≥-[[JaccardThreshold]] pairs.
+  /** Eager-checkpointed (vertex, component) rows of
+    * [[Graph.connectedComponents]] over the ≥-[[JaccardThreshold]] subset
+    * of `pairs` (a [[verifiedPairs]] checkpoint of the same corpus).
     */
-  private def clusterChain(documents: DataFrame,
-      needComp: Boolean): (DataFrame, Option[DataFrame]) = {
-    def buildPairs(): DataFrame = {
-      clusterPairBuilds.incrementAndGet()
-      minhashVerifiedPairs(documents).localCheckpoint(eager = true)
-    }
-    def buildComp(pairs: DataFrame): DataFrame = {
-      clusterCompBuilds.incrementAndGet()
-      // REP-LEVEL components, expanded through the member map — identical
-      // (vertex, component) rows to CC over the expanded pair list (the
-      // [[repClusterCtesSql]] identity: a cross rep edge connects ALL
-      // members of both groups, so expanded components are rep components
-      // with groups attached at their reps, and min member = min rep),
-      // but the min-label propagation runs on the group-count-sized rep
-      // graph instead of the duplication-inflated pair list.
-      val (grp, members, _) = canonicalTexts(documents)
-      val e2 = pairs.filter(col("jaccard") >= JaccardThreshold)
-        .select(col("doc_a"), col("doc_b"))
-        .join(members.select(col("doc_id").as("doc_a"), col("rep_id").as("ra")), Seq("doc_a"))
-        .join(members.select(col("doc_id").as("doc_b"), col("rep_id").as("rb")), Seq("doc_b"))
-        .select(col("ra"), col("rb"))
-        .localCheckpoint(eager = true) // cross CC + within set read it
-      val repCC = Graph.connectedComponents(
-        e2.filter(col("ra") =!= col("rb"))
-          .select(least(col("ra"), col("rb")).as("doc_a"),
-            greatest(col("ra"), col("rb")).as("doc_b"))
-          .distinct())
-        .withColumnRenamed("vertex", "rep_id")
-      val withinOnly = e2.filter(col("ra") === col("rb"))
-        .select(col("ra").as("rep_id")).distinct()
-        .join(repCC.select(col("rep_id")), Seq("rep_id"), "left_anti")
-        .withColumn("component", col("rep_id"))
-      members
-        .join(repCC.unionByName(withinOnly), Seq("rep_id"))
-        .select(col("doc_id").as("vertex"), col("component"))
-        .localCheckpoint(eager = true)
-    }
-    val paths = TextAnalysis.scanPaths(documents)
-    if (paths.isEmpty) { // in-memory fixture: exact, unmemoized
-      val pairs = buildPairs()
-      return (pairs, if (needComp) Some(buildComp(pairs)) else None)
-    }
-    val spark = documents.sparkSession
-    val key = TextAnalysis.planMemoKey(documents, paths, "cluster")
-    val cached = clusterMemoRef.get
-    val valid = cached != null && (cached.session eq spark) && cached.key == key &&
-      cached.rddIds.subsetOf(spark.sparkContext.getPersistentRDDs.keySet)
-    if (valid && (!needComp || cached.comp.isDefined))
-      return (cached.pairs, cached.comp)
-    if (valid) { // upgrade in place: components over the pinned pair blocks
-      val comp = buildComp(cached.pairs)
-      val upgraded = cached.copy(comp = Some(comp),
-        rddIds = cached.rddIds ++ TextAnalysis.checkpointRddId(comp))
-      if (!clusterMemoRef.compareAndSet(cached, upgraded)) {
-        // lost the upgrade race: a concurrent caller replaced the entry, so
-        // our freshly built comp's checkpoint blocks are recorded nowhere
-        // clearClusterMemo could find — unpersist them here (they'd leak
-        // for the session otherwise), then resolve against the winner
-        val persisted = spark.sparkContext.getPersistentRDDs
-        TextAnalysis.checkpointRddId(comp)
-          .foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
-        return clusterChain(documents, needComp)
-      }
-      return (upgraded.pairs, upgraded.comp)
-    }
-    clearClusterMemo() // at most one corpus pinned at a time
-    val pairs = buildPairs()
-    val comp = if (needComp) Some(buildComp(pairs)) else None
-    val ids = (TextAnalysis.checkpointRddId(pairs) ++
-      comp.flatMap(TextAnalysis.checkpointRddId)).toSet
-    if (!clusterMemoRef.compareAndSet(null, ClusterMemoEntry(spark, key, pairs, comp, ids))) {
-      // lost the cold-path install race: a concurrent caller pinned its own
-      // entry after our clearClusterMemo — a plain set() would orphan the
-      // winner's checkpoint blocks (recorded nowhere clearClusterMemo could
-      // find). Unpersist OUR blocks instead and resolve against the winner
-      // (the same losing-side protocol as the upgrade CAS above).
-      val persisted = spark.sparkContext.getPersistentRDDs
-      ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
-      return clusterChain(documents, needComp)
-    }
-    (pairs, comp)
+  private def repComponents(documents: DataFrame, pairs: DataFrame): DataFrame = {
+    // REP-LEVEL components, expanded through the member map — identical
+    // (vertex, component) rows to CC over the expanded pair list (the
+    // [[repClusterCtesSql]] identity: a cross rep edge connects ALL
+    // members of both groups, so expanded components are rep components
+    // with groups attached at their reps, and min member = min rep),
+    // but the min-label propagation runs on the group-count-sized rep
+    // graph instead of the duplication-inflated pair list.
+    val (_, members, _) = canonicalTexts(documents)
+    val e2 = pairs.filter(col("jaccard") >= JaccardThreshold)
+      .select(col("doc_a"), col("doc_b"))
+      .join(members.select(col("doc_id").as("doc_a"), col("rep_id").as("ra")), Seq("doc_a"))
+      .join(members.select(col("doc_id").as("doc_b"), col("rep_id").as("rb")), Seq("doc_b"))
+      .select(col("ra"), col("rb"))
+      .localCheckpoint(eager = true) // cross CC + within set read it
+    val repCC = Graph.connectedComponents(
+      e2.filter(col("ra") =!= col("rb"))
+        .select(least(col("ra"), col("rb")).as("doc_a"),
+          greatest(col("ra"), col("rb")).as("doc_b"))
+        .distinct())
+      .withColumnRenamed("vertex", "rep_id")
+    val withinOnly = e2.filter(col("ra") === col("rb"))
+      .select(col("ra").as("rep_id")).distinct()
+      .join(repCC.select(col("rep_id")), Seq("rep_id"), "left_anti")
+      .withColumn("component", col("rep_id"))
+    members
+      .join(repCC.unionByName(withinOnly), Seq("rep_id"))
+      .select(col("doc_id").as("vertex"), col("component"))
+      .localCheckpoint(eager = true)
   }
 
   /** The serving-side LSH index for [[nearDupDetect]]: capped band buckets
@@ -703,7 +594,7 @@ object Dedup {
     * Output: (doc_a, doc_b, n_shared, containment, contained).
     */
   def dedupContainment(documents: DataFrame): DataFrame =
-    clusterChain(documents, needComp = false)._1
+    verifiedPairs(documents)
       .withColumn("containment",
         col("n_shared").cast("double") / least(col("n_a"), col("n_b")))
       .filter(col("containment") >= ContainmentThreshold)
@@ -727,10 +618,9 @@ object Dedup {
     * doc per partition move.
     */
   def similarDocs(documents: DataFrame): DataFrame = {
-    // two consumers (both union orientations) — served by the memoized
-    // verified-candidate checkpoint (retrieval reusing the dedup index
-    // work is the production shape, not a bench artifact)
-    val pairs = clusterChain(documents, needComp = false)._1
+    // two consumers (both union orientations) — served by one verified-
+    // candidate checkpoint (retrieval reuses the dedup index work)
+    val pairs = verifiedPairs(documents)
     val sym = pairs
       .select(col("doc_a").as("doc_id"), col("doc_b").as("similar_id"),
         col("n_shared"), col("jaccard"))
@@ -891,8 +781,8 @@ object Dedup {
     * threshold); recall per jaccard decile is the informative axis —
     * minhash banding misses near-threshold pairs far more often than
     * near-identical ones, and this output shows exactly that curve.
-    * Consumes the cluster-chain memo ([[clusterChain]]) for the LSH side:
-    * on a warm memo the audit costs only the sample-sized truth build.
+    * The LSH side is the same [[verifiedPairs]] checkpoint the other
+    * cluster-family queries build; the truth side is sample-sized.
     * Output: (jacc_decile, n_truth, n_detected, recall) per decile.
     */
   def dedupRecall(documents: DataFrame): DataFrame = {
@@ -1034,8 +924,7 @@ object Dedup {
     // strictly-later suffix) instead of one nested transform/flatten HOF —
     // the same (doc_a < doc_b) multiset, but generator-to-generator without
     // building the array-of-struct-arrays intermediate per posting list
-    // (profiled ~1.3 → ~1.0 s warm on the 1.13 M-pair sf0.1 stream;
-    // ProfileTool stages 5a/5b)
+    // (profiled ~1.3 → ~1.0 s warm on the 1.13 M-pair sf0.1 stream)
     val pairs = postings
       .select(posexplode(col("docs")).as(Seq("i", "doc_a")), col("docs"))
       .select(col("doc_a"),
@@ -1136,7 +1025,7 @@ object Dedup {
     * recursive-CTE transitive closure in DuckDB.
     */
   def dedupClusters(documents: DataFrame): DataFrame = {
-    val comp = clusterChain(documents, needComp = true)._2.get
+    val comp = repComponents(documents, verifiedPairs(documents))
     documents.select(col("doc_id"))
       .join(comp.withColumnRenamed("vertex", "doc_id"), Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("cluster_id"))
@@ -1327,8 +1216,8 @@ object Dedup {
     //               + Σ_{(a,b)} C(gsz(a),2)·gsz(b) + C(gsz(b),2)·gsz(a)
     //               + Σ_{rep triangles} gsz(a)·gsz(b)·gsz(c)
     // (the 2+1 term is valid because a group with a cross edge has a kept
-    // bucket, so gsz ≥ 2 ⇒ its within-clique exists). n_edges stays the
-    // memo-scan count. A/B-pinned to the naive join form by PipelineSpec
+    // bucket, so gsz ≥ 2 ⇒ its within-clique exists). n_edges stays a
+    // count over the verified-pair checkpoint. A/B-pinned to the naive join form by PipelineSpec
     // on real corpora and the skew fixture.
     val edges = thresholdedPairs(documents).select(col("doc_a"), col("doc_b"))
     val edgeStats = edges.agg(count(lit(1)).as("n_edges"))
@@ -1783,8 +1672,8 @@ object Dedup {
     // 54 M-edge joins per run vs rep-sized joins here. The expanded
     // [[centralityCore]] form remains as [[centralityFromPairs]], which
     // PipelineSpec A/Bs against hand-built graphs.
-    val (pairs, compOpt) = clusterChain(documents, needComp = true)
-    val comp = compOpt.get
+    val pairs = verifiedPairs(documents)
+    val comp = repComponents(documents, pairs)
     val (grp, members, _) = canonicalTexts(documents)
     val edges = pairs.filter(col("jaccard") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"))
@@ -1916,9 +1805,8 @@ object Dedup {
   }
 
   /** Integer power iteration + per-cluster argmax over an ALREADY
-    * materialized pair list and component relation — the part
-    * [[dedupCentrality]] runs on the memoized chain and
-    * [[centralityFromPairs]] on a hand-built graph.
+    * materialized pair list and component relation — the expanded
+    * (member-level) form [[centralityFromPairs]] runs on hand-built graphs.
     */
   private def centralityCore(pairsM: DataFrame, comp: DataFrame): DataFrame = {
     val und = pairsM

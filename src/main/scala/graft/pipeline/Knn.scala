@@ -1257,7 +1257,7 @@ object Knn {
     * the [[PqShortK]] shortlist rows only. The lookup table is also what
     * keeps the fused scan stage's generated code under Janino's 64 KB
     * method limit — the per-candidate dot form compiled 4× slower and then
-    * ran interpreted (see [[PqProfile]]).
+    * ran interpreted.
     */
   def knnIvfPq(embeddingsRaw: DataFrame, nlist: Int = NList, nprobe: Int = NProbe): DataFrame = {
     val embeddings = validVecs(embeddingsRaw)

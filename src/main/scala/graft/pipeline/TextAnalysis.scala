@@ -1327,13 +1327,13 @@ object TextAnalysis {
   }
 
   /** The RDD a checkpointed DataFrame is pinned to (its LogicalRDD leaf). */
-  private[pipeline] def checkpointRddId(df: DataFrame): Option[Int] =
+  private def checkpointRddId(df: DataFrame): Option[Int] =
     df.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }
 
   /** File paths under the plan, or empty for in-memory inputs. */
-  private[pipeline] def scanPaths(df: DataFrame): Seq[String] =
+  private def scanPaths(df: DataFrame): Seq[String] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
@@ -1344,14 +1344,13 @@ object TextAnalysis {
     }.flatten.sorted
 
   /** Memo key: scan roots + canonicalized-plan semantic hash + per-file
-    * (length, mtime) fingerprint + a per-memo salt. The plan hash keeps a
-    * filtered or projected frame over the SAME parquet paths from
+    * (length, mtime) fingerprint + a salt (the round count). The plan hash
+    * keeps a filtered or projected frame over the SAME parquet paths from
     * colliding with the bare table scan; the file fingerprint invalidates
     * the memo when files are rewritten in place mid-session (same paths,
-    * new bytes). Shared by the BPE chain memo and
-    * [[Dedup]]'s cluster-chain memo.
+    * new bytes).
     */
-  private[pipeline] def planMemoKey(documents: DataFrame, paths: Seq[String], salt: String): String = {
+  private def planMemoKey(documents: DataFrame, paths: Seq[String], salt: String): String = {
     val planFp = documents.queryExecution.analyzed.canonicalized.semanticHash()
     val conf = documents.sparkSession.sessionState.newHadoopConf()
     val fileFp = documents.inputFiles.sorted.map { f =>

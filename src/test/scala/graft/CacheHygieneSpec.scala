@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 /** Session-lifetime cache hygiene: every operator that materializes an
   * intermediate (via eager localCheckpoint — the only sanctioned caching
   * primitive; raw `persist()` without a same-scope unpersist is banned)
@@ -18,7 +20,13 @@ package graft
 class CacheHygieneSpec extends SparkSuite {
 
   private val coveredQueries = Seq(
-    "dedup_minhash_lsh",  // Dedup: sh + bands
+    "dedup_minhash_lsh",  // Dedup: sh + bands + verified pairs
+    "dedup_minhash_lsh_skew", // Dedup: same chain over the skew fixture
+    "dedup_containment",  // Dedup: verified pairs
+    "similar_docs",       // Dedup: verified pairs
+    "dedup_recall",       // Dedup: verified pairs + sample shingles
+    "source_dup_rates",   // Dedup: verified pairs + rep components
+    "dedup_keep_best",    // Dedup: verified pairs + rep components
     "dedup_ngram_jaccard",// Dedup: postings
     "dedup_simhash",      // Dedup: simhashCore signatures
     "dedup_clusters",     // Graph: und0 persist + per-round checkpoints
@@ -52,11 +60,9 @@ class CacheHygieneSpec extends SparkSuite {
 
   test("no persisted RDDs survive a query's lifetime (ContextCleaner drains checkpoints)") {
     spark.catalog.clearCache()
-    // the BPE chain memo and the dedup cluster-chain memo are the two
-    // sanctioned session-lifetime caches — drop them so the clean-session
-    // precondition below sees only leaks
+    // the BPE chain memo is the one sanctioned session-lifetime cache —
+    // drop it so the clean-session precondition below sees only leaks
     graft.pipeline.TextAnalysis.clearBpeMemo()
-    graft.pipeline.Dedup.clearClusterMemo()
     assert(drainPersistentRdds() == 0,
       "session not clean before test — another spec leaked cached blocks")
     coveredQueries.foreach { name =>
@@ -65,10 +71,6 @@ class CacheHygieneSpec extends SparkSuite {
       def run(): Long = SparkEntry.queries(name)(spark, sf()).count()
       val rows = run()
       assert(rows >= 0)
-      // the cluster-family queries intentionally pin the memoized pair +
-      // component checkpoints — clear the memo so the drain below verifies
-      // everything ELSE (bands, per-round CC labels, PR rounds) is garbage
-      graft.pipeline.Dedup.clearClusterMemo()
       val left = drainPersistentRdds()
       assert(left == 0,
         s"$name left $left persisted RDD(s) after its result was dropped: " +
@@ -76,38 +78,26 @@ class CacheHygieneSpec extends SparkSuite {
     }
   }
 
-  test("cluster family shares ONE pair build + ONE comp build; clear drains it") {
+  test("a cluster query on one corpus leaves another corpus's built result evaluable") {
     import graft.pipeline.Dedup
-    Dedup.clearClusterMemo()
-    assert(drainPersistentRdds() == 0)
-    val pb = Dedup.clusterPairBuilds.get()
-    val cb = Dedup.clusterCompBuilds.get()
-    // pairs-only consumer first: builds pairs, must NOT build components
-    val lsh = SparkEntry.queries("dedup_minhash_lsh")(spark, sf()).collect()
-    assert(Dedup.clusterPairBuilds.get() == pb + 1)
-    assert(Dedup.clusterCompBuilds.get() == cb, "pairs-only query built components")
-    C.reclaimBlocks(spark) // the harness reclaim must NOT evict the memo
-    // comp consumer upgrades the entry in place (no pair rebuild)
-    val clusters = SparkEntry.queries("dedup_clusters")(spark, sf()).collect()
-    assert(clusters.nonEmpty && lsh.nonEmpty)
-    assert(Dedup.clusterPairBuilds.get() == pb + 1,
-      "dedup_clusters rebuilt the pair relation instead of reusing the memo")
-    assert(Dedup.clusterCompBuilds.get() == cb + 1)
-    C.reclaimBlocks(spark)
-    // the rest of the family is fully memo-served, results hash-stable
-    val keepBest = SparkEntry.queries("dedup_keep_best")(spark, sf()).collect()
-    val centrality = SparkEntry.queries("dedup_centrality")(spark, sf()).collect()
-    val clusters2 = SparkEntry.queries("dedup_clusters")(spark, sf()).collect()
-    assert(keepBest.nonEmpty && centrality.nonEmpty)
-    assert(clusters2.toSeq == clusters.toSeq)
-    assert(Dedup.clusterPairBuilds.get() == pb + 1)
-    assert(Dedup.clusterCompBuilds.get() == cb + 1)
-    // memo lifecycle: protected ids are persisted, clear drains to zero
-    assert(Dedup.clusterMemoProtectedRddIds(spark).nonEmpty)
-    Dedup.clearClusterMemo()
-    assert(Dedup.clusterMemoProtectedRddIds(spark).isEmpty)
-    assert(drainPersistentRdds() == 0,
-      "clearClusterMemo left persisted RDD blocks behind")
+    // two file-backed corpora: disjoint halves of the documents table
+    val docs = Tables.documents(spark, sf())
+    val dirs = Seq(0, 1).map { r =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-corpus").toString
+      docs.filter(col("doc_id") % 2 === r).write.mode("overwrite").parquet(dir)
+      dir
+    }
+    try {
+      val Seq(a, b) = dirs.map(spark.read.parquet(_))
+      // built (its eager checkpoints ran) but not yet evaluated
+      val lshA = Dedup.dedupMinhashLsh(a)
+      assert(Dedup.dedupClusters(b).collect().nonEmpty)
+      val got = lshA.collect().toSeq
+      assert(got.nonEmpty, "corpus A has no near-dup pairs — the check is vacuous")
+      assert(got == Dedup.dedupMinhashLsh(a).collect().toSeq)
+    } finally dirs.foreach { d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
+    }
   }
 
   test("bpe_train and bpe_encode share ONE chain build; clearBpeMemo drains it") {

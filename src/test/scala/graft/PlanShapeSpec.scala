@@ -286,12 +286,12 @@ class PlanShapeSpec extends SparkSuite {
     assert(p.contains("ExistingRDD"), "expected the checkpointed L-row count relation")
   }
 
-  test("dedup_recall reads only materialized relations: memoized LSH pairs + sample shingles") {
+  test("dedup_recall reads only materialized relations: verified LSH pairs + sample shingles") {
     val p = plan("dedup_recall")
     assert(!p.contains("FileScan"),
       "dedup_recall re-scans the corpus — sample shingles or LSH pairs not materialized")
-    // two distinct checkpoints feed it: the cluster-memo pair relation and
-    // the 200-doc sample shingle set
+    // two distinct checkpoints feed it: the verified-pair relation and the
+    // 200-doc sample shingle set
     assert("Scan ExistingRDD".r.findAllIn(p).size >= 2, "expected >=2 checkpoint scans")
   }
 

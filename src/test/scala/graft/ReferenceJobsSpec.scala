@@ -4,15 +4,21 @@ import graft.jobs.ReferenceJobs
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** The reference-replay layer on the reference's OWN bundled inputs
-  * (read-only at /root/reference/src/main/resources) with the reference's
-  * parameters — the "switch engines, keep your data and jobs" claim,
-  * checked against independently-computed expectations on the collected
-  * rows.
+/** The reference-replay layer on small files in the reference's own input
+  * formats (FIXTURES.md §A; `src/test/resources/reference`) with the
+  * reference's parameters — the "switch engines, keep your data and jobs"
+  * claim, checked against independently-computed expectations on the
+  * collected rows. Each fixture carries the edge its test names: fail
+  * pairs inside/at/over the 2 s gap, a success reset and same-second ties
+  * (LoginLog); orders paid in time, at the 900 s boundary, late, never, and
+  * a pay with an empty txId (OrderLog); receipts inside and on the
+  * [pay−3 s, pay+5 s] edges, one just outside and one with no pay
+  * (ReceiptLog); a URL-count tie and more than five URLs in one window
+  * (apache.log).
   */
 class ReferenceJobsSpec extends SparkSuite {
 
-  private val res = "/root/reference/src/main/resources"
+  private val res = new java.io.File(getClass.getResource("/reference").toURI).getPath
   private lazy val all = ReferenceJobs.runAll(spark, res)
 
   test("every file-driven reference job returns rows on its bundled input") {
@@ -36,6 +42,7 @@ class ReferenceJobsSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)
     assert(got.nonEmpty)
+    assert(got.contains((7233L, 1558430900L, 1558430900L)), "same-second tie pair missing")
   }
 
   test("order timeout: every created order gets exactly one outcome") {
@@ -49,6 +56,7 @@ class ReferenceJobsSpec extends SparkSuite {
     assert(msgs.keySet.subsetOf(
       Set("payed successfully", "payed but already timeout", "order timeout")))
     assert(msgs.getOrElse("payed successfully", 0L) > 0)
+    assert(msgs.size == 3, s"fixture must hit all three outcomes: $msgs")
   }
 
   test("tx match: matched + unmatched_pay partitions the pay events") {
@@ -60,12 +68,22 @@ class ReferenceJobsSpec extends SparkSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(sides.getOrElse("matched", 0L) + sides.getOrElse("unmatched_pay", 0L) == pays)
     assert(sides.getOrElse("matched", 0L) > 0)
+    assert(sides.getOrElse("unmatched_receipt", 0L) > 0)
   }
 
   test("network flow ranks URLs within each 10min/5s window") {
     val nf = all("network_flow")
     assert(nf.filter(col("rnk") > 5).count() == 0)
     assert(nf.filter(col("rnk") === 1).count() > 0)
+    // within a window, rank order is (cnt desc, url asc) — ties included
+    val byWindow = nf.collect().groupBy(_.getAs[Long]("window_start")).values
+    byWindow.foreach { rows =>
+      val ranked = rows.sortBy(_.getAs[Long]("rnk")).toSeq
+      assert(ranked.map(_.getAs[Long]("rnk")) == (1L to ranked.size.toLong))
+      assert(ranked == ranked.sortBy(r => (-r.getAs[Long]("cnt"), r.getAs[String]("url"))))
+    }
+    assert(byWindow.exists(rows => rows.map(_.getAs[Long]("cnt")).distinct.size < rows.length),
+      "fixture has no URL-count tie inside a ranked window")
   }
 
   test("HotItemsWithSql: SQL surface == DataFrame surface row-for-row") {

@@ -1,6 +1,7 @@
 #!/bin/bash
-# Pre-commit compile gate: main AND test sources must compile before any
-# commit that stages a .scala or build file. Installed as .git/hooks/pre-commit
+# Pre-commit compile gate: main AND test sources, and the perfbench/
+# benchmark harness, must compile before any commit that stages a .scala or
+# build file. Installed as .git/hooks/pre-commit
 # (see tools/install-hooks.sh). The round-10 lesson: a "compile before commit"
 # convention that only covers main let a test-tree break ship at HEAD —
 # Test/compile is now part of the enforced gate, not a convention.
@@ -33,6 +34,20 @@ else
   exit 1
 fi
 echo "[precommit] compile green (main + test)" >&2
+
+# The benchmark harness (perfbench/, its own sbt build over this library)
+# calls library APIs directly, so a library change can break it unseen —
+# compile it too, with the same offline flags perfbench/run.py uses.
+perfbench_opts="-Dsbt.offline=true -Xmx2g"
+if [[ -f "$HOME/.sbt/repositories" ]]; then
+  perfbench_opts+=" -Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories"
+fi
+if ! (cd perfbench && COURSIER_MODE=offline SBT_OPTS="$perfbench_opts" \
+      sbt -batch -error compile >/dev/null); then
+  echo "[precommit] perfbench COMPILE FAILED. Commit blocked." >&2
+  exit 1
+fi
+echo "[precommit] compile green (perfbench)" >&2
 
 # Opt-in full-suite gate (GRAFT_PRECOMMIT_FULLTEST=1): runs `sbt test` so the
 # commit itself carries the green run. The default gate stays compile-only —
