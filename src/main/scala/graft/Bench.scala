@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every [[SparkEntry.queries]] entry on
@@ -25,18 +24,12 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // long timeouts: a host-disk latency burst degrades the number
-      // instead of killing the run with RpcTimeout
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // long timeouts: a host-disk latency burst degrades the number
+    // instead of killing the run with RpcTimeout
+    val spark = GraftSession.local(conf = Map(
+      "spark.network.timeout" -> "600s",
+      "spark.executor.heartbeatInterval" -> "60s"))
     // warmup: absorb classloading + whole-stage-codegen compilation so the
     // first measured query isn't charged ~7 s of JVM startup...
     spark.range(1L << 20).selectExpr("sum(id)").collect()

@@ -52,10 +52,15 @@ object GraftSession {
     b
   }
 
+  /** Core count of the local mains (`Bench`, `Verify`, `ProfileQuery`,
+    * `PlanDump`, `ScaleUp`): `SPARK_GRAFT_CPUS`, default 32. */
+  def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   /** Local session with this library's settings applied (tests, benches,
-    * single-node runs). */
-  def local(cores: Int, quiet: Boolean = true): SparkSession = {
-    val s = builder()
+    * single-node runs); `conf` adds caller-specific settings. */
+  def local(cores: Int = envCores, quiet: Boolean = true,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val s = conf.foldLeft(builder()) { case (b, (k, v)) => b.config(k, v) }
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false")

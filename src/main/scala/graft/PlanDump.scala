@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
   * evidence the optimization rounds commit under `plans/`. Usage:
   *   tools/run.sh graft.PlanDump <outDir> <suffix> <query...>
   * writes `<outDir>/<query>_<suffix>.txt` per query, planned against
-  * `SPARK_GRAFT_SF_DIR` at `SPARK_GRAFT_CPUS` cores (defaults as [[Bench]]).
+  * `SPARK_GRAFT_SF_DIR` at [[GraftSession.envCores]] cores.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,7 +17,7 @@ object PlanDump {
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(outDir)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

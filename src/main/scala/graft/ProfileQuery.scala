@@ -12,8 +12,8 @@ import scala.collection.concurrent.TrieMap
   * a `[profile]` total: jobs, stages (= exchanges + materializations),
   * tasks, summed task time (CPU actually used) and shuffle bytes.
   * Wall-clock far above task-time/cores means the query is paying
-  * scheduling/planning overhead, not compute. Runs at `SPARK_GRAFT_CPUS`
-  * cores (default 32, as [[Bench]]). Usage:
+  * scheduling/planning overhead, not compute. Runs at
+  * [[GraftSession.envCores]] cores. Usage:
   *   tools/run.sh graft.ProfileQuery <query> [sfDir] [passes]
   */
 object ProfileQuery {
@@ -21,7 +21,7 @@ object ProfileQuery {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileQuery <query> [sfDir] [passes]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 2
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

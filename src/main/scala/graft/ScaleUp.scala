@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: builds an N× id-shifted replica of a testdata directory so the
@@ -26,12 +26,7 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "target/sfrep1"
     val copies = if (args.length > 2) args(2).toInt else 10
 
-    val spark = GraftSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (SPARK_GRAFT_ONLY=a,b,c) for scale runs where
     // executing every registered query would dominate; the driver sets no

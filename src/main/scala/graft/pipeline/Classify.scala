@@ -49,15 +49,6 @@ object Classify {
     */
   private val Scale = 10000L
 
-  /** Below this many rows — for BOTH the measured (lang, tok) cell count
-    * and the dense V × L model it implies — the NB model is assembled on
-    * the driver from three bounded collects instead of the ~10-stage
-    * distributed build (the [[TextAnalysis.qualityDrift]] measured-cutover
-    * discipline; at bench scale the distributed build is pure single-task
-    * scheduling). Vocabulary-resolution-bounded, corpus-size-independent.
-    */
-  private[graft] val NbSmallModelRows = 1L << 20
-
   /** The (doc_id, tok, n) token-count relation scoring and model training
     * share — one corpus explode, map-side combined.
     */
@@ -123,35 +114,26 @@ object Classify {
     * to end (the ×100 replica priced the naive form at ~34 s).
     */
   def nbLangConfusion(documents: DataFrame): DataFrame =
-    nbLangConfusion(documents, NbSmallModelRows)
+    nbLangConfusion(documents, graft.C.DriverCollectMax)
 
   private[graft] def nbLangConfusion(documents: DataFrame,
-      smallModelMax: Long): DataFrame = {
+      driverCollectMax: Long): DataFrame = {
     val spark = documents.sparkSession
     val (repTok, repLang, docLang) = canonicalNbInputs(documents)
     val langTok0 = langTokAggOf(repTok, repLang)
-    // measured cutover (the qualityDrift/connectedComponents discipline,
-    // via intrinsically BOUNDED collects): every driver-side collect is a
-    // limit(cap + 1) — never more than the cap crosses to the driver no
-    // matter the corpus — and an overflowing collect (length > cap) routes
-    // to the distributed build below, which at bench scale is ~10
-    // single-task stages of pure scheduling. The model relations are
-    // vocabulary-bounded (V ≤ VocabCap, dense model = V × L), so the
-    // driver path is the 100 TB-correct choice whenever L is sane.
-    val maxLangs = smallModelMax / VocabCap
-    val langCounts = repLang.groupBy(col("lang")).agg(sum(col("glsz")).as("nd"))
     // per-class doc counts from the rep multiplicities (Σ glsz over a
     // lang's reps = its doc count — the same BIGINTs the raw
     // (doc_id, lang) groupBy produces)
-    val lc = langCounts.limit(maxLangs.toInt + 1).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val cells0 =
-      if (lc.length <= maxLangs) {
-        val c = langTok0.limit(smallModelMax.toInt + 1).collect()
-        if (c.length <= smallModelMax) Some(c) else None
-      } else None
-    val (model, priors, priorPred) =
-      if (cells0.isDefined) {
+    val langCounts = repLang.groupBy(col("lang")).agg(sum(col("glsz")).as("nd"))
+    // the driver build needs the (lang, tok) cells AND the dense
+    // VocabCap × L model they imply under the cap — vocabulary-bounded,
+    // corpus-size-independent, so it is the 100 TB choice whenever L is sane
+    val local = for {
+      lc <- graft.C.collectBelow(langCounts, driverCollectMax / VocabCap)
+      cells <- graft.C.collectBelow(langTok0, driverCollectMax)
+    } yield (lc.map(r => (r.getString(0), r.getLong(1))), cells)
+    val (model, priors, priorPred) = local match {
+      case Some((lc, cells0)) =>
         import spark.implicits._
         val total = lc.map(_._2).sum
         val priorRows = lc.map { case (lang, nd) =>
@@ -161,7 +143,7 @@ object Classify {
         // in UTF-8 BYTE order (Spark's UTF8String / DuckDB's binary
         // collation), which diverges from java.lang.String's UTF-16 order
         // on supplementary characters (emoji vs U+E000..U+FFFF)
-        val byTok = cells0.get
+        val byTok = cells0
           .map(r => (r.getString(1), r.getLong(2))).groupBy(_._1)
           .view.mapValues(_.map(_._2).sum).toMap
         val vocabToks = byTok.toSeq
@@ -169,7 +151,7 @@ object Classify {
             Ordering.Tuple2(Ordering.Long, utf8NullsFirst))
           .take(VocabCap).map(_._1)
         val vocabSet = vocabToks.toSet
-        val cells = cells0.get
+        val cells = cells0
           .filter(r => vocabSet(r.getString(1)))
           .map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
           .toMap
@@ -188,11 +170,11 @@ object Classify {
         (modelRows.toSeq.toDF("lang", "tok", "s_fp"),
           priorRows.toSeq.toDF("lang", "prior_fp"),
           Seq(Tuple1(priorLang)).toDF("prior_lang"))
-      } else {
+      case None =>
         val (m, p) = nbModelFrom(langTok0, docLang)
         (m, p, p.agg(min(struct((-col("prior_fp")).as("ns"), col("lang"))).as("top"))
           .select(col("top.lang").as("prior_lang")))
-      }
+    }
     // the model is DENSE over vocab × langs, so a rep with ≥1 in-vocab
     // token scores against EVERY language here — the rep×L cross-join +
     // left-outer of the legacy plan is redundant for those reps, and the

@@ -1637,141 +1637,18 @@ object Dedup {
     * keep); docs with no near-dup edges are not ranked (their keep
     * decision is trivial).
     */
-  /** Below this many (oriented) cross rep edges the [[PrIters]] power-
-    * iteration rounds run on the DRIVER over the collected quotient graph
-    * instead of as distributed joins — the [[Graph.connectedComponents]]
-    * small-graph discipline applied to PageRank: the distributed loop
-    * costs 3 scheduled jobs per round (contrib checkpoint, crossIn agg,
-    * rank checkpoint) regardless of graph size, which at bench scale is
-    * pure scheduling (measured round-16: 91 jobs / 2.9 s for the whole
-    * query, most of it the loop), while the driver arithmetic on a
-    * ≤2^20-edge graph is milliseconds. The cutover is on the MEASURED
-    * count of the already-materialized edge checkpoint, not an estimate;
-    * above it the unchanged distributed loop runs (the 100 TB shape).
-    * Both paths compute identical BIGINTs (equality is spec-tested).
-    */
-  private[graft] val PrSmallGraphEdges = 1L << 20
-
   def dedupCentrality(documents: DataFrame): DataFrame =
-    dedupCentrality(documents, PrSmallGraphEdges)
+    dedupCentrality(documents, C.DriverCollectMax)
 
   private[graft] def dedupCentrality(documents: DataFrame,
-      smallGraphMax: Long): DataFrame = {
-    // QUOTIENT-GRAPH power iteration (the [[dedupCentralitySql]]
-    // factorization, engine-side): members of an exact-dup group are
-    // structurally symmetric in the expanded graph, so pr is constant
-    // within groups, and because each in-edge contributes
-    // (85·r) div (100·deg) INDIVIDUALLY before the sum, the member-level
-    // round collapses exactly to rep-level arithmetic —
-    //   in_sum(r) = Σ_{cross s~r} gsz_s·c_s + (gsz_r − 1)·c_r,
-    //   deg(r) = (gsz_r − 1) + Σ_{cross s~r} gsz_s
-    // (for every graph vertex, gsz ≥ 2 ⟺ the within-clique exists: a
-    // cross edge implies a kept band bucket, and a ≥2-group with a kept
-    // bucket always pairs internally). Identical BIGINTs to the expanded
-    // rounds; the ×100 replica priced the expanded form at ~74 s of
-    // 54 M-edge joins per run vs rep-sized joins here. The expanded
-    // [[centralityCore]] form remains as [[centralityFromPairs]], which
-    // PipelineSpec A/Bs against hand-built graphs.
+      driverCollectMax: Long): DataFrame = {
     val pairs = verifiedPairs(documents)
     val comp = repComponents(documents, pairs)
-    val (grp, members, _) = canonicalTexts(documents)
+    val (_, members, _) = canonicalTexts(documents)
     val edges = pairs.filter(col("jaccard") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"))
-    val e2 = edges
-      .join(members.select(col("doc_id").as("doc_a"), col("rep_id").as("ra")), Seq("doc_a"))
-      .join(members.select(col("doc_id").as("doc_b"), col("rep_id").as("rb")), Seq("doc_b"))
-      .select(col("ra"), col("rb"))
-      .localCheckpoint(eager = true) // within + cross read it
-    val gsz = grp.select(col("rep_id"), col("gsz"))
-    val withinSet = e2.filter(col("ra") === col("rb"))
-      .select(col("ra").as("rep_id")).distinct()
-      .localCheckpoint(eager = true) // counted for the cutover, then collected or unioned
-    val crossBoth = {
-      val rc = e2.filter(col("ra") =!= col("rb"))
-        .select(least(col("ra"), col("rb")).as("s"), greatest(col("ra"), col("rb")).as("t"))
-        .distinct()
-      rc.unionAll(rc.select(col("t").as("s"), col("s").as("t")))
-        .localCheckpoint(eager = true) // degree + every PR round read it
-    }
-    // (rep_id, deg, r) after [[PrIters]] rounds — driver fast path under
-    // the measured cutover, unchanged distributed loop above it
-    val spark = documents.sparkSession
-    // The cutover gates on EVERYTHING the driver path collects: cross edges
-    // AND within-clique vertices (a corpus of many internally-near-dup exact
-    // groups has nCross ≈ 0 but withinSet proportional to the group count —
-    // gating on nCross alone could pick the driver path against an unbounded
-    // collect). verts ≤ nCross + nWithin, so gszMap is bounded by the same
-    // measure. Both counts read cached checkpoint blocks.
-    val nCross = crossBoth.count()
-    val nWithin = withinSet.count()
-    val degRank: DataFrame = if (nCross + nWithin < smallGraphMax) {
-      import spark.implicits._
-      val cross = crossBoth.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val within = withinSet.collect().map(_.getLong(0))
-      // gsz only for graph vertices: a verts-sized semi-join + collect,
-      // never the corpus-sized group table
-      val vertsLocal = (cross.map(_._1) ++ within).distinct.toSeq.toDF("rep_id")
-      val gszMap = gsz.join(vertsLocal, Seq("rep_id"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // inner-join semantics of the distributed path: only verts with a
-      // group row rank (every graph vertex is a rep, so this is all of them)
-      val verts = (cross.map(_._1) ++ within).distinct.filter(gszMap.contains)
-      val crossW = scala.collection.mutable.HashMap.empty[Long, Long]
-      cross.foreach { case (s, t) =>
-        gszMap.get(t).foreach(gt => crossW.update(s, crossW.getOrElse(s, 0L) + gt))
-      }
-      val deg = verts.map(v => v -> (gszMap(v) - 1 + crossW.getOrElse(v, 0L))).toMap
-      var rank = verts.map(v => v -> PrScale).toMap
-      for (_ <- 1 to PrIters) {
-        // identical integer arithmetic to the distributed rounds (and the
-        // oracle's unrolled CTEs): Scala Long `/` truncates toward zero
-        // exactly like Spark `div` / DuckDB `//`
-        val c = verts.map(v => v -> (85L * rank(v)) / (100L * deg(v))).toMap
-        val crossIn = scala.collection.mutable.HashMap.empty[Long, Long]
-        cross.foreach { case (s, t) =>
-          if (c.contains(s))
-            crossIn.update(t, crossIn.getOrElse(t, 0L) + gszMap(s) * c(s))
-        }
-        rank = verts.map { v =>
-          v -> (PrScale * 15 / 100 + crossIn.getOrElse(v, 0L)
-            + (gszMap(v) - 1) * c(v))
-        }.toMap
-      }
-      verts.map(v => (v, deg(v), rank(v))).toSeq.toDF("rep_id", "deg", "r")
-    } else {
-      val verts = crossBoth.select(col("s").as("rep_id"))
-        .unionAll(withinSet.select(col("rep_id"))).distinct()
-      val crossW = crossBoth
-        .join(gsz.select(col("rep_id").as("t"), col("gsz").as("gt")), Seq("t"))
-        .groupBy(col("s").as("rep_id")).agg(sum(col("gt")).as("w"))
-      val deg = verts
-        .join(gsz, Seq("rep_id"))
-        .join(crossW, Seq("rep_id"), "left_outer")
-        .select(col("rep_id"), col("gsz"),
-          (col("gsz") - 1 + coalesce(col("w"), lit(0L))).as("deg"))
-        .localCheckpoint(eager = true) // every PR round reads it
-      var rank = deg.select(col("rep_id").as("v"), lit(PrScale).as("r"))
-      for (_ <- 1 to PrIters) {
-        val contrib = deg.join(rank, col("rep_id") === col("v"))
-          .select(col("rep_id"), col("gsz"),
-            expr("(85 * r) div (100 * deg)").as("c"))
-          .localCheckpoint(eager = true) // cross sum + self term read it
-        val crossIn = crossBoth
-          .join(contrib.select(col("rep_id").as("s"), col("gsz").as("gs"), col("c")), Seq("s"))
-          .groupBy(col("t").as("rep_id")).agg(sum(col("gs") * col("c")).as("cin"))
-        rank = contrib
-          .join(crossIn, Seq("rep_id"), "left_outer")
-          .select(col("rep_id").as("v"),
-            (lit(PrScale * 15 / 100) + coalesce(col("cin"), lit(0L))
-              + (col("gsz") - 1) * col("c")).as("r"))
-          .localCheckpoint(eager = true) // cut per-round lineage
-      }
-      deg.select(col("rep_id"), col("deg"))
-        .join(rank.withColumnRenamed("v", "rep_id"), Seq("rep_id"))
-        .select(col("rep_id"), col("deg"), col("r"))
-    }
     members
-      .join(degRank, Seq("rep_id"))
+      .join(quotientRanks(edges, members, driverCollectMax), Seq("rep_id"))
       .join(comp.withColumnRenamed("vertex", "doc_id")
         .withColumnRenamed("component", "cluster_id"), Seq("doc_id"))
       .withColumn("keep", (row_number().over(
@@ -1782,61 +1659,83 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** The PR + cluster-keeper core over an explicit (doc_a, doc_b) pair
-    * list — separated so the integer power iteration is testable on
-    * hand-built graphs (the LSH pair generator is luck-of-the-bands on
-    * synthetic fixtures).
+  /** (rep_id, deg, r) after [[PrIters]] integer power-iteration rounds over
+    * the dup-group QUOTIENT of the (doc_a, doc_b) near-dup graph, where
+    * `members` maps every doc_id to its group's rep_id (the
+    * [[dedupCentralitySql]] factorization, engine-side). Members of an
+    * exact-dup group are structurally symmetric in the expanded graph, so
+    * pr is constant within groups, and because each in-edge contributes
+    * (85·r) div (100·deg) INDIVIDUALLY before the sum, the member-level
+    * round collapses exactly to rep-level arithmetic —
+    *   in_sum(r) = Σ_{cross s~r} gsz_s·c_s + (gsz_r − 1)·c_r,
+    *   deg(r) = (gsz_r − 1) + Σ_{cross s~r} gsz_s
+    * (for every graph vertex, gsz ≥ 2 ⟺ the within-clique exists: a
+    * cross edge implies a kept band bucket, and a ≥2-group with a kept
+    * bucket always pairs internally). Identical BIGINTs to the expanded
+    * rounds; the ×100 replica priced the expanded form at ~74 s of
+    * 54 M-edge joins per run vs rep-sized joins here. With every document
+    * its own group (gsz = 1) the quotient IS the expanded graph.
     */
-  private[graft] def centralityFromPairs(pairs: DataFrame): DataFrame = {
-    // Evaluate the pair plan — potentially the full MinHash-LSH tree —
-    // exactly ONCE and truncate its lineage. Without this, every power
-    // iteration (and connectedComponents) re-optimizes and re-schedules
-    // its own copy of the LSH subtree: ~11 copies, hundreds of
-    // micro-stages (the round-7 157 s plan). localCheckpoint blocks are
-    // released by the ContextCleaner when the frames go out of scope, so
-    // nothing leaks in a long-lived session (same discipline as
-    // Graph.connectedComponents' per-round checkpoints).
-    val pairsM = pairs.localCheckpoint(eager = true)
-    // components over the already-materialized pair list — NOT the raw
-    // LSH plan, which would evaluate the whole pipeline a second time
-    val comp = Graph.connectedComponents(pairsM)
-      .withColumnRenamed("vertex", "doc_id").withColumnRenamed("component", "cluster_id")
-    centralityCore(pairsM, comp)
-  }
-
-  /** Integer power iteration + per-cluster argmax over an ALREADY
-    * materialized pair list and component relation — the expanded
-    * (member-level) form [[centralityFromPairs]] runs on hand-built graphs.
-    */
-  private def centralityCore(pairsM: DataFrame, comp: DataFrame): DataFrame = {
-    val und = pairsM
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // (src, dst, deg) is loop-invariant — hoist the edge⋈degree join out
-    // of the iteration and materialize it, so each round is exactly one
-    // skinny equi-join with the current rank plus one hash-agg.
-    val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = true)
-    val undDeg = und.join(deg, Seq("src")).localCheckpoint(eager = true)
-    var rank = deg.select(col("src").as("v"), lit(PrScale).as("r"))
-    for (_ <- 1 to PrIters) {
-      rank = undDeg.join(rank, col("src") === col("v"))
-        .select(col("dst"), expr("(85 * r) div (100 * deg)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-        .select(col("dst").as("v"), (lit(PrScale * 15 / 100) + col("in_sum")).as("r"))
-        // cut lineage per round — otherwise the iterations nest join plans
-        .localCheckpoint(eager = true)
+  private[graft] def quotientRanks(pairs: DataFrame, members: DataFrame,
+      driverCollectMax: Long): DataFrame = {
+    val spark = pairs.sparkSession
+    val e2 = pairs
+      .join(members.select(col("doc_id").as("doc_a"), col("rep_id").as("ra")), Seq("doc_a"))
+      .join(members.select(col("doc_id").as("doc_b"), col("rep_id").as("rb")), Seq("doc_b"))
+      .select(col("ra"), col("rb"))
+      .localCheckpoint(eager = true) // cross edges + within set read it
+    val cross = {
+      val rc = e2.filter(col("ra") =!= col("rb"))
+        .select(least(col("ra"), col("rb")).as("s"), greatest(col("ra"), col("rb")).as("t"))
+        .distinct()
+      rc.unionAll(rc.select(col("t").as("s"), col("s").as("t")))
     }
-    rank.select(col("v").as("doc_id"), col("r").as("pr_fp"))
-      .join(deg.select(col("src").as("doc_id"), col("deg")), Seq("doc_id"))
-      .join(comp, Seq("doc_id"))
-      .withColumn("keep", (row_number().over(
-        Window.partitionBy(col("cluster_id"))
-          .orderBy(col("pr_fp").desc, col("doc_id"))) === 1).cast("long"))
-      .select(col("doc_id"), col("cluster_id"), col("deg"), col("pr_fp"), col("keep"))
-      .orderBy(col("doc_id"))
+    val verts = cross.select(col("s").as("rep_id"))
+      .unionAll(e2.filter(col("ra") === col("rb")).select(col("ra").as("rep_id")))
+      .distinct()
+    // group sizes of the graph vertices only — a verts-sized semi-join,
+    // never the corpus-sized group table
+    val gsz = members.join(verts, Seq("rep_id"))
+      .groupBy(col("rep_id")).agg(count(lit(1)).as("gsz"))
+    // weighted in-edges (s → t, w): a cross edge carries gsz_s (every
+    // member of s links every member of t) and each vertex's self edge
+    // carries gsz − 1 (its within-group clique), so per round
+    //   deg(t) = Σ w,   r'(t) = 0.15 + Σ w · ((85·r_s) div (100·deg_s))
+    val qe = cross
+      .join(gsz.select(col("rep_id").as("s"), col("gsz").as("w")), Seq("s"))
+      .select(col("s"), col("t"), col("w"))
+      .unionAll(gsz.select(col("rep_id").as("s"), col("rep_id").as("t"),
+        (col("gsz") - 1).as("w")))
+    C.collectBelow(qe, driverCollectMax) match {
+      case Some(rows) =>
+        val in = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val deg = in.groupMapReduce(_._2)(_._3)(_ + _)
+        var rank = deg.map { case (v, _) => v -> PrScale }
+        for (_ <- 1 to PrIters) {
+          // identical integer arithmetic to the distributed rounds (and the
+          // oracle's unrolled CTEs): Scala Long `/` truncates toward zero
+          // exactly like Spark `div` / DuckDB `//`
+          val c = rank.map { case (v, r) => v -> (85L * r) / (100L * deg(v)) }
+          rank = in.groupMapReduce(_._2)(e => e._3 * c(e._1))(_ + _)
+            .map { case (v, sum) => v -> (PrScale * 15 / 100 + sum) }
+        }
+        import spark.implicits._
+        deg.toSeq.map { case (v, d) => (v, d, rank(v)) }.toDF("rep_id", "deg", "r")
+      case None =>
+        val qeM = qe.localCheckpoint(eager = true) // degree + every round read it
+        val deg = qeM.groupBy(col("t").as("rep_id")).agg(sum(col("w")).as("deg"))
+          .localCheckpoint(eager = true) // every round reads it
+        var rank = deg.select(col("rep_id"), lit(PrScale).as("r"))
+        for (_ <- 1 to PrIters) {
+          val contrib = deg.join(rank, Seq("rep_id"))
+            .select(col("rep_id").as("s"), expr("(85 * r) div (100 * deg)").as("c"))
+          rank = qeM.join(contrib, Seq("s"))
+            .groupBy(col("t").as("rep_id"))
+            .agg((lit(PrScale * 15 / 100) + sum(col("w") * col("c"))).as("r"))
+            .localCheckpoint(eager = true) // cut per-round lineage
+        }
+        deg.join(rank, Seq("rep_id"))
+    }
   }
 
   /** DuckDB twin of [[dedupCentrality]], factored over the dup-group

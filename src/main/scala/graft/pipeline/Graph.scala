@@ -41,30 +41,19 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Below this many (oriented) edges the graph is collected and solved
-    * with driver-side union-find instead of the iterative join loop: a
-    * thousand-edge graph costs ~2 s of pure per-round scheduling in the
-    * distributed path (3 rounds × joins + checkpoint + count) versus
-    * ~milliseconds of union-find. The collect at the 1M-edge cutover is
-    * ~16 MB of primitive payload but on the order of 100 MB transient on
-    * the driver once Row/tuple/HashMap boxing is counted — sized for the
-    * multi-GB drivers a 100 TB job runs with, the same family of
-    * small-side hybrid as broadcast-join selection.
-    * The cutover is on the MEASURED count (already materialized for the
-    * partition sizing), not an estimate, and both paths produce the
-    * identical min-label fixpoint (equality is tested).
-    */
-  private val SmallGraphEdges = 1L << 20
-
   /** Connected components over an undirected edge list. `edges` must have
     * two long columns (src, dst by any name); both orientations are
     * derived internally. Returns one row per vertex that appears in any
     * edge: (vertex, component) with component = min vertex id reachable.
-    * `smallGraphMax` overrides the driver-side fast-path threshold
-    * (tests pass 0 to force the distributed loop).
+    * A graph of fewer than [[graft.C.DriverCollectMax]] oriented edges is
+    * collected ([[graft.C.collectBelow]]) and solved with driver-side
+    * union-find — the same min-label fixpoint as the distributed loop.
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 20,
-      smallGraphMax: Long = SmallGraphEdges): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame =
+    connectedComponents(edges, maxIters, graft.C.DriverCollectMax)
+
+  private[graft] def connectedComponents(edges: DataFrame, maxIters: Int,
+      driverCollectMax: Long): DataFrame = {
     val cols = edges.columns
     require(cols.length == 2, s"edge list needs exactly 2 columns, got ${cols.mkString(",")}")
     // one explode emits both orientations in a single pass over the input
@@ -76,62 +65,54 @@ object Graph {
         struct(col(cols(1)).as("src"), col(cols(0)).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist()
-    val nEdges = try und0.count() // also materializes the persist
-    catch { case e: Throwable => und0.unpersist(); throw e }
-    // strict <, so the documented smallGraphMax = 0 override forces the
-    // distributed loop even for an empty graph (its empty-input behavior
-    // stays test-reachable)
-    if (nEdges < smallGraphMax) {
-      try {
-        val result = unionFind(und0.collect().map(r => (r.getLong(0), r.getLong(1))))
+    // unpersist on every exit path — a mid-loop failure must not leak
+    // the cached edge list in a long-lived session
+    try graft.C.collectBelow(und0, driverCollectMax) match {
+      case Some(rows) =>
         val spark = edges.sparkSession
         import spark.implicits._
-        return result.toSeq.toDF("vertex", "component")
-      } finally und0.unpersist() // same no-leak invariant as the loop path
-    }
-    val parts = math.max(1, math.min(256, (nEdges / 1000000L).toInt + 1))
-    val und = und0.coalesce(parts)
-
-    // the loop's data-size proportionality comes from the coalesce above
-    // plus AQE's runtime shuffle coalescing — deliberately NOT from
-    // mutating the session's shuffle.partitions, which would clobber any
-    // concurrent query sharing the SparkSession (measured: the conf
-    // change bought nothing over coalesce+AQE anyway)
-    try {
-      // round 1's neighbor-min needs no join while every label is still its
-      // vertex id — it is a plain agg over the edge list, fused into init
-      var labels = und
-        .groupBy(col("src"))
-        .agg(min(col("dst")).as("m"))
-        .select(col("src").as("v"), least(col("src"), col("m")).as("lbl"))
-        .localCheckpoint(eager = true)
-      var changed = 1L
-      var it = 0
-      while (changed > 0 && it < maxIters) {
-        val nbrMin = und
-          .join(labels.select(col("v").as("dst"), col("lbl")), Seq("dst"))
-          .groupBy(col("src").as("v")).agg(min(col("lbl")).as("nlbl"))
-        val step = labels
-          .join(nbrMin, Seq("v"), "left_outer")
-          .select(col("v"), col("lbl").as("prev"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        val jumped = step.as("x")
-          .join(step.select(col("v").as("p"), col("lbl").as("plbl")).as("y"),
-            col("x.lbl") === col("y.p"), "left_outer")
-          .select(col("x.v").as("v"), col("x.prev").as("prev"),
-            least(col("x.lbl"), coalesce(col("plbl"), col("x.lbl"))).as("lbl"))
-          // cut lineage per round — otherwise iters nest join plans exponentially
+        unionFind(rows.map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.toDF("vertex", "component")
+      case None =>
+        val nEdges = und0.count()
+        val parts = math.max(1, math.min(256, (nEdges / 1000000L).toInt + 1))
+        val und = und0.coalesce(parts)
+        // the loop's data-size proportionality comes from the coalesce
+        // above plus AQE's runtime shuffle coalescing — deliberately NOT
+        // from mutating the session's shuffle.partitions, which would
+        // clobber any concurrent query sharing the SparkSession (measured:
+        // the conf change bought nothing over coalesce+AQE anyway).
+        // Round 1's neighbor-min needs no join while every label is still
+        // its vertex id — it is a plain agg over the edge list, fused into
+        // init.
+        var labels = und
+          .groupBy(col("src"))
+          .agg(min(col("dst")).as("m"))
+          .select(col("src").as("v"), least(col("src"), col("m")).as("lbl"))
           .localCheckpoint(eager = true)
-        changed = jumped.filter(col("lbl") =!= col("prev")).count()
-        labels = jumped.select(col("v"), col("lbl"))
-        it += 1
-      }
-      labels.select(col("v").as("vertex"), col("lbl").as("component"))
-    } finally {
-      // unpersist on every exit path — a mid-loop failure must not leak
-      // the cached edge list in a long-lived session
-      und0.unpersist()
-    }
+        var changed = 1L
+        var it = 0
+        while (changed > 0 && it < maxIters) {
+          val nbrMin = und
+            .join(labels.select(col("v").as("dst"), col("lbl")), Seq("dst"))
+            .groupBy(col("src").as("v")).agg(min(col("lbl")).as("nlbl"))
+          val step = labels
+            .join(nbrMin, Seq("v"), "left_outer")
+            .select(col("v"), col("lbl").as("prev"),
+              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+          val jumped = step.as("x")
+            .join(step.select(col("v").as("p"), col("lbl").as("plbl")).as("y"),
+              col("x.lbl") === col("y.p"), "left_outer")
+            .select(col("x.v").as("v"), col("x.prev").as("prev"),
+              least(col("x.lbl"), coalesce(col("plbl"), col("x.lbl"))).as("lbl"))
+            // cut lineage per round — otherwise iters nest join plans exponentially
+            .localCheckpoint(eager = true)
+          changed = jumped.filter(col("lbl") =!= col("prev")).count()
+          labels = jumped.select(col("v"), col("lbl"))
+          it += 1
+        }
+        labels.select(col("v").as("vertex"), col("lbl").as("component"))
+    } finally und0.unpersist()
   }
 
   /** Driver-side union-find with path compression and a min-root-wins

@@ -435,8 +435,8 @@ object Knn {
   /** nlist bound under which the Lloyd tail (mean assembly, empty-bucket
     * fallback, next-round centroid relation) runs on the driver: the
     * per-round collect is ≤ nlist × dim (lbl, pos, m) rows — bounded by
-    * the PARAMETER, known before any job, so unlike the measured cutovers
-    * no sizing pass is needed. 4096 × 64 dims ≈ 6 MB. Corpus-adaptive
+    * the PARAMETER, known before any job, so unlike the measured
+    * [[graft.C.collectBelow]] cutovers no sizing pass is needed. 4096 × 64 dims ≈ 6 MB. Corpus-adaptive
     * callers (⌈√N⌉) exceed it at scale and take the distributed loop.
     */
   private[graft] val LloydDriverMaxK = 1 << 12

@@ -2090,95 +2090,84 @@ object TextAnalysis {
     * cumulative windows, and the argmax join-back all touch bounded
     * relations, never the corpus.
     */
-  /** Below this many histogram rows the KS statistic is computed on the
-    * DRIVER over the collected (source, ppl_fp, c) histogram instead of as
-    * the grid-join + cumulative-window + argmax-join-back plan — the
-    * [[graft.pipeline.Graph.connectedComponents]] measured-cutover
-    * discipline: the histogram is score-resolution-bounded (≤ ~350 k
-    * distinct `ppl_fp` × sources regardless of corpus size), and at bench
-    * scale the 8 post-histogram stages were pure scheduling (profiled 48
-    * jobs / ~2.6 s for the query, most of it downstream of `hist`).
-    * Identical integer arithmetic both paths (spec-tested).
-    */
-  private[graft] val KsSmallHistRows = 1L << 20
-
   def qualityDrift(documents: DataFrame): DataFrame =
-    qualityDrift(documents, KsSmallHistRows)
+    qualityDrift(documents, graft.C.DriverCollectMax)
 
   private[graft] def qualityDrift(documents: DataFrame,
-      smallHistMax: Long): DataFrame = {
+      driverCollectMax: Long): DataFrame = {
     val spark = documents.sparkSession
     val scored = lmDocScores(documents)
       .withColumn("ppl_fp",
         round(col("nll_fp").cast("double") / col("n_bigrams")).cast("long"))
       .join(documents.select(col("doc_id"), col("source")), "doc_id")
-    // (source, ppl_fp) histogram — the bounded relation everything else runs on
-    val hist = scored.groupBy(col("source"), col("ppl_fp"))
+    // (source, ppl_fp) histogram — the bounded relation everything else
+    // runs on; a histogram under the cap is reduced on the driver
+    val hist0 = scored.groupBy(col("source"), col("ppl_fp"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true)
-    val nHist = hist.count() // cached checkpoint blocks; the cutover measure
-    if (nHist < smallHistMax) {
-      import spark.implicits._
-      val rows = hist.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val nS = rows.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-      val nTotal = rows.map(_._3).sum
-      val grid = rows.map(_._2).distinct.sorted
-      val cumAll = {
-        val byPpl = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
-        var acc = 0L
-        grid.map { p => acc += byPpl.getOrElse(p, 0L); p -> acc }.toMap
-      }
-      val out = nS.keys.toSeq.sorted.map { s =>
-        val byPpl = rows.filter(_._1 == s).map(r => r._2 -> r._3).toMap
-        val ns = nS(s); val nRest = nTotal - ns
-        var cumS = 0L
-        var ksNum = -1L // first grid point always sets atPpl: an all-zero
-        var atPpl = 0L  // diff row still reports min(ppl), like the argmax join
-        grid.foreach { p =>
-          cumS += byPpl.getOrElse(p, 0L)
-          val diff = math.abs(cumS * nRest - (cumAll(p) - cumS) * ns)
-          if (diff > ksNum) { ksNum = diff; atPpl = p } // min ppl at the max
+    graft.C.collectBelow(hist0, driverCollectMax) match {
+      case Some(collected) =>
+        import spark.implicits._
+        val rows = collected.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        val nS = rows.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+        val nTotal = rows.map(_._3).sum
+        val grid = rows.map(_._2).distinct.sorted
+        val cumAll = {
+          val byPpl = rows.groupBy(_._2).view.mapValues(_.map(_._3).sum).toMap
+          var acc = 0L
+          grid.map { p => acc += byPpl.getOrElse(p, 0L); p -> acc }.toMap
         }
-        val dPpm = if (ns * nRest > 0) ksNum * KsScale / (ns * nRest) else 0L
-        (s, ns, nRest, ksNum, atPpl, dPpm)
-      }
-      return out.toDF("source", "n_s", "n_rest", "ks_num", "at_ppl_fp", "d_ppm")
-        .orderBy(col("source"))
+        val out = nS.keys.toSeq.sorted.map { s =>
+          val byPpl = rows.filter(_._1 == s).map(r => r._2 -> r._3).toMap
+          val ns = nS(s); val nRest = nTotal - ns
+          var cumS = 0L
+          var ksNum = -1L // first grid point always sets atPpl: an all-zero
+          var atPpl = 0L  // diff row still reports min(ppl), like the argmax join
+          grid.foreach { p =>
+            cumS += byPpl.getOrElse(p, 0L)
+            val diff = math.abs(cumS * nRest - (cumAll(p) - cumS) * ns)
+            if (diff > ksNum) { ksNum = diff; atPpl = p } // min ppl at the max
+          }
+          val dPpm = if (ns * nRest > 0) ksNum * KsScale / (ns * nRest) else 0L
+          (s, ns, nRest, ksNum, atPpl, dPpm)
+        }
+        out.toDF("source", "n_s", "n_rest", "ks_num", "at_ppl_fp", "d_ppm")
+          .orderBy(col("source"))
+      case None =>
+        val hist = hist0.localCheckpoint(eager = true)
+        val perSource = hist.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
+        val total = broadcast(hist.agg(sum(col("c")).as("n_total")))
+        // full grid so every source has a cum at every observed score value
+        val grid = hist.select(col("ppl_fp")).distinct()
+          .crossJoin(perSource.select(col("source")))
+        val cumS = grid
+          .join(hist, Seq("source", "ppl_fp"), "left_outer")
+          .withColumn("cum_s",
+            sum(coalesce(col("c"), lit(0L)))
+              .over(Window.partitionBy(col("source")).orderBy(col("ppl_fp"))))
+        val cumAll = hist.groupBy(col("ppl_fp")).agg(sum(col("c")).as("ca"))
+          .withColumn("cum_all", sum(col("ca")).over(Window.orderBy(col("ppl_fp"))))
+        val diffs = cumS
+          .join(cumAll.select(col("ppl_fp"), col("cum_all")), "ppl_fp")
+          .join(perSource, "source")
+          .crossJoin(total)
+          .select(col("source"), col("ppl_fp"), col("n_s"),
+            (col("n_total") - col("n_s")).as("n_rest"),
+            abs(col("cum_s") * (col("n_total") - col("n_s"))
+              - (col("cum_all") - col("cum_s")) * col("n_s")).as("diff"))
+          .localCheckpoint(eager = true) // max + argmax join-back read it twice
+        val ks = diffs.groupBy(col("source")).agg(max(col("diff")).as("ks_num"))
+        diffs
+          .join(ks, "source")
+          .filter(col("diff") === col("ks_num"))
+          .groupBy(col("source"))
+          .agg(first(col("n_s")).as("n_s"), first(col("n_rest")).as("n_rest"),
+            first(col("ks_num")).as("ks_num"), min(col("ppl_fp")).as("at_ppl_fp"))
+          .select(col("source"), col("n_s"), col("n_rest"), col("ks_num"),
+            col("at_ppl_fp"),
+            when(col("n_s") * col("n_rest") > 0,
+              expr(s"ks_num * $KsScale div (n_s * n_rest)")).otherwise(0L).as("d_ppm"))
+          .orderBy(col("source"))
     }
-    val perSource = hist.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
-    val total = broadcast(hist.agg(sum(col("c")).as("n_total")))
-    // full grid so every source has a cum at every observed score value
-    val grid = hist.select(col("ppl_fp")).distinct()
-      .crossJoin(perSource.select(col("source")))
-    val cumS = grid
-      .join(hist, Seq("source", "ppl_fp"), "left_outer")
-      .withColumn("cum_s",
-        sum(coalesce(col("c"), lit(0L)))
-          .over(Window.partitionBy(col("source")).orderBy(col("ppl_fp"))))
-    val cumAll = hist.groupBy(col("ppl_fp")).agg(sum(col("c")).as("ca"))
-      .withColumn("cum_all", sum(col("ca")).over(Window.orderBy(col("ppl_fp"))))
-    val diffs = cumS
-      .join(cumAll.select(col("ppl_fp"), col("cum_all")), "ppl_fp")
-      .join(perSource, "source")
-      .crossJoin(total)
-      .select(col("source"), col("ppl_fp"), col("n_s"),
-        (col("n_total") - col("n_s")).as("n_rest"),
-        abs(col("cum_s") * (col("n_total") - col("n_s"))
-          - (col("cum_all") - col("cum_s")) * col("n_s")).as("diff"))
-      .localCheckpoint(eager = true) // max + argmax join-back read it twice
-    val ks = diffs.groupBy(col("source")).agg(max(col("diff")).as("ks_num"))
-    diffs
-      .join(ks, "source")
-      .filter(col("diff") === col("ks_num"))
-      .groupBy(col("source"))
-      .agg(first(col("n_s")).as("n_s"), first(col("n_rest")).as("n_rest"),
-        first(col("ks_num")).as("ks_num"), min(col("ppl_fp")).as("at_ppl_fp"))
-      .select(col("source"), col("n_s"), col("n_rest"), col("ks_num"),
-        col("at_ppl_fp"),
-        when(col("n_s") * col("n_rest") > 0,
-          expr(s"ks_num * $KsScale div (n_s * n_rest)")).otherwise(0L).as("d_ppm"))
-      .orderBy(col("source"))
   }
 
   def qualityDriftSql: String =

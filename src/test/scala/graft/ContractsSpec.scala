@@ -139,4 +139,26 @@ class ContractsSpec extends SparkSuite {
       ("unmatched_order", 2L), ("unmatched_order", 3L),
       ("unmatched_line", 2L), ("unmatched_line", 3L)))
   }
+
+  test("collectBelow: rows iff fewer than the cap, the input's rows, never evaluated past the cap") {
+    val cap = 5L
+    // n = 0 is the empty input; three partitions so the limit spans them
+    Seq(0L, cap - 1, cap, cap + 1).foreach { n =>
+      val df = spark.range(0, n, 1, 3).toDF("id")
+      val got = C.collectBelow(df, cap)
+      if (n < cap)
+        assert(got.map(_.map(_.getLong(0)).sorted.toSeq)
+          .contains(df.collect().map(_.getLong(0)).sorted.toSeq), s"n=$n")
+      else assert(got.isEmpty, s"n=$n")
+    }
+    // at or over the cap nothing past the cap-th row is computed: rows
+    // beyond it raise if evaluated
+    val overCap = spark.range(0, 3 * cap, 1, 1)
+      .select(when(col("id") < cap, col("id")).otherwise(raise_error(lit("past the cap"))))
+    assert(C.collectBelow(overCap, cap).isEmpty)
+    // cap 0 takes the distributed branch even on empty input, and never
+    // evaluates the input
+    assert(C.collectBelow(spark.range(0).toDF(), 0L).isEmpty)
+    assert(C.collectBelow(spark.range(3).select(raise_error(lit("evaluated"))), 0L).isEmpty)
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.ops.{EventWindows, TopN}
-import graft.pipeline.{Classify, Curation, Dedup, Knn, TextAnalysis}
+import graft.pipeline.{Classify, Curation, Dedup, Graph, Knn, TextAnalysis}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Invariants over the analytics and pipeline operators (SURVEY.md §5.4):
@@ -191,29 +192,71 @@ class PipelineSpec extends SparkSuite {
     assert(strat.except(flat).count() > 0)
   }
 
-  test("connected components: chain needs pointer jumping, labels are component mins") {
+  // Measured cutovers A/B: one table over every collectBelow site. Each
+  // entry is one test; each of its rows runs the same input at the default
+  // cap (the driver form on these inputs) and at cap 0 (the distributed
+  // form, even on empty input), checks both branches' rows, and compares
+  // the two row sets.
+  private type CutoverSite = (String, Long => DataFrame, Array[Row] => Unit)
+
+  // a 100-vertex chain (diameter 99 > maxIters, so neighbor-min alone
+  // cannot converge — the distributed loop fails this if label
+  // compression is broken) plus a disjoint triangle with non-contiguous ids
+  private def chainTri: DataFrame = {
     import spark.implicits._
-    // a 100-vertex chain (diameter 99 > maxIters, so neighbor-min alone
-    // cannot converge — this fails if label compression is broken) plus a
-    // disjoint triangle with non-contiguous ids
-    val chain = (0L until 99L).map(i => (i, i + 1))
-    val tri = Seq((500L, 700L), (700L, 600L))
-    // smallGraphMax = 0 forces the distributed loop — the path under test
-    val comp = graft.pipeline.Graph.connectedComponents(
-        (chain ++ tri).toDF("s", "t"), smallGraphMax = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    ((0L until 99L).map(i => (i, i + 1)) ++
+      Seq((500L, 700L), (700L, 600L))).toDF("s", "t")
+  }
+  private def noEdges: DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("s", "t")
+  }
+  // duplicates with mixed labels exercise the glsz multiplicities; the
+  // empty doc exercises the prior-argmax fallback on both paths
+  private def nbMixed: DataFrame = {
+    import spark.implicits._
+    Seq(
+      (1L, "aa aa bb", "en"), (2L, "aa bb bb", "en"), (3L, "aa aa", "en"),
+      (4L, "xx yy xx", "fr"), (5L, "yy xx yy", "fr"), (6L, "", "de"),
+      (7L, "aa aa bb", "fr"), (8L, "aa aa bb", "en")
+    ).toDF("doc_id", "text", "lang")
+  }
+  private val ccLabels: Array[Row] => Unit = rows => {
+    val comp = rows.map(r => (r.getLong(0), r.getLong(1))).toMap
     assert((0L to 99L).forall(comp(_) == 0L))
     assert(Seq(500L, 600L, 700L).forall(comp(_) == 500L))
     assert(comp.size == 103) // only vertices that appear in edges
-    // the driver-side union-find fast path computes the identical fixpoint
-    val fast = graft.pipeline.Graph.connectedComponents((chain ++ tri).toDF("s", "t"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(fast == comp)
+  }
+  private val nonEmpty: Array[Row] => Unit = rows => assert(rows.nonEmpty)
+
+  Seq[(String, Seq[CutoverSite])](
+    "connected components: chain needs pointer jumping, labels are component mins" -> Seq(
+      ("cc chain + triangle", cap => Graph.connectedComponents(chainTri, 20, cap), ccLabels),
+      ("cc empty edge list", cap => Graph.connectedComponents(noEdges, 20, cap),
+        rows => assert(rows.isEmpty))),
+    "centrality driver fast path == distributed PR loop (measured-cutover A/B)" -> Seq(
+      ("centrality corpus", cap => Dedup.dedupCentrality(docs, cap), nonEmpty)),
+    "nb confusion: driver model build == distributed build (measured-cutover A/B)" -> Seq(
+      ("nb mixed labels", cap => Classify.nbLangConfusion(nbMixed, cap), nonEmpty),
+      ("nb corpus", cap => Classify.nbLangConfusion(docs, cap), nonEmpty)),
+    "quality drift driver fast path == distributed KS plan (measured-cutover A/B)" -> Seq(
+      ("ks corpus", cap => TextAnalysis.qualityDrift(docs, cap), nonEmpty))
+  ).foreach { case (name, sites) =>
+    test(name) {
+      sites.foreach { case (site, run, check) =>
+        val fast = run(C.DriverCollectMax).collect()
+        val dist = run(0L).collect()
+        check(fast)
+        check(dist)
+        def sorted(rows: Array[Row]) = rows.map(_.toSeq).toSeq.sortBy(_.mkString(","))
+        assert(sorted(fast) == sorted(dist), s"$site: driver and distributed rows differ")
+      }
+    }
   }
 
   test("connected components: empty edge list yields empty labels; singleton corpus all-keep") {
     import spark.implicits._
-    assert(graft.pipeline.Graph.connectedComponents(
+    assert(Graph.connectedComponents(
       Seq.empty[(Long, Long)].toDF("s", "t")).count() == 0)
     // three unrelated docs: no LSH pairs -> every doc its own kept cluster
     val singletons = Seq(
@@ -571,9 +614,12 @@ class PipelineSpec extends SparkSuite {
     // fixed-point ranks are positive and bounded by total in-mass
     rows.foreach(r => assert(r._4 >= Dedup.PrScale * 15 / 100))
     // hand-checked integer power iteration on an explicit path graph
-    // 1—2—3: deg = (1, 2, 1); per round r'(v) = 150000 + Σ (85·r(u)) div (100·deg(u))
+    // 1—2—3 with every doc its own group (gsz = 1, where the quotient IS
+    // the expanded graph), on both branches of the measured cutover:
+    // deg = (1, 2, 1); per round r'(v) = 150000 + Σ (85·r(u)) div (100·deg(u))
     import spark.implicits._
     val path = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val ownGroups = Seq(1L, 2L, 3L).map(v => (v, v)).toDF("doc_id", "rep_id")
     var exp = Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L)
     val degs = Map(1L -> 1L, 2L -> 2L, 3L -> 1L)
     val nbrs = Map(1L -> Seq(2L), 2L -> Seq(1L, 3L), 3L -> Seq(2L))
@@ -582,23 +628,15 @@ class PipelineSpec extends SparkSuite {
         v -> (150000L + nbrs(v).map(u => (85L * exp(u)) / (100L * degs(u))).sum)
       }
     }
-    val pr = Dedup.centralityFromPairs(path).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    exp.foreach { case (v, e) => assert(pr(v)._3 == e, s"pr of $v: ${pr(v)._3} != $e") }
-    // middle of the path is the most central -> sole keeper of cluster 1
-    assert(pr(2L)._3 > pr(1L)._3 && pr(2L)._3 > pr(3L)._3)
-    assert(pr.values.map(_._1).toSet == Set(1L) && pr.count(_._2._4 == 1L) == 1 && pr(2L)._4 == 1L)
-    assert(pr(1L)._2 == 1L && pr(2L)._2 == 2L && pr(3L)._2 == 1L)
-  }
-
-  test("centrality driver fast path == distributed PR loop (measured-cutover A/B)") {
-    // the corpus fixture rides the small-graph driver path by default;
-    // smallGraphMax = 0 forces the distributed join loop over the same
-    // quotient graph — identical (doc, cluster, deg, pr, keep) rows
-    val fast = Dedup.dedupCentrality(docs).collect().map(_.toSeq).toSet
-    val dist = Dedup.dedupCentrality(docs, smallGraphMax = 0L)
-      .collect().map(_.toSeq).toSet
-    assert(fast.nonEmpty && fast == dist)
+    Seq(C.DriverCollectMax, 0L).foreach { cap =>
+      val pr = Dedup.quotientRanks(path, ownGroups, cap).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(pr.keySet == Set(1L, 2L, 3L), s"cap $cap")
+      assert(pr.view.mapValues(_._1).toMap == degs, s"cap $cap: deg")
+      exp.foreach { case (v, e) => assert(pr(v)._2 == e, s"cap $cap: pr of $v: ${pr(v)._2} != $e") }
+      // middle of the path is the most central
+      assert(pr(2L)._2 > pr(1L)._2 && pr(2L)._2 > pr(3L)._2)
+    }
   }
 
   test("skew fixture fires both quadratic guards live; capped outputs drop boilerplate") {
@@ -992,27 +1030,6 @@ class PipelineSpec extends SparkSuite {
     assert(out(("de", "en")) == 1L)
     // every document lands in exactly one confusion cell
     assert(out.values.sum == 6L)
-  }
-
-  test("nb confusion: driver model build == distributed build (measured-cutover A/B)") {
-    import spark.implicits._
-    // duplicates with mixed labels exercise the glsz multiplicities; the
-    // empty doc exercises the prior-argmax fallback on both paths
-    val rows = Seq(
-      (1L, "aa aa bb", "en"), (2L, "aa bb bb", "en"), (3L, "aa aa", "en"),
-      (4L, "xx yy xx", "fr"), (5L, "yy xx yy", "fr"), (6L, "", "de"),
-      (7L, "aa aa bb", "fr"), (8L, "aa aa bb", "en")
-    ).toDF("doc_id", "text", "lang")
-    val fast = Classify.nbLangConfusion(rows).collect().map(_.toSeq).toSet
-    // smallModelMax = 0 forces the distributed model build — the else-branch
-    val dist = Classify.nbLangConfusion(rows, smallModelMax = 0L)
-      .collect().map(_.toSeq).toSet
-    assert(fast.nonEmpty && fast == dist)
-    // and on the sf fixture corpus (real vocabulary-cap cutoffs and ties)
-    val fastC = Classify.nbLangConfusion(docs).collect().map(_.toSeq).toSet
-    val distC = Classify.nbLangConfusion(docs, smallModelMax = 0L)
-      .collect().map(_.toSeq).toSet
-    assert(fastC.nonEmpty && fastC == distC)
   }
 
   test("doc top terms: tf desc then df asc then token; ties broken stably") {
@@ -2187,11 +2204,6 @@ class PipelineSpec extends SparkSuite {
       assert(dPpm == ksNum * 1000000L / (nS * nRest))
       assert(dPpm >= 0L && dPpm <= 1000000L)
     }
-    // driver fast path == distributed KS plan (measured-cutover A/B):
-    // smallHistMax = 0 forces the grid-join + window + argmax-join plan
-    val dist = TextAnalysis.qualityDrift(docs, smallHistMax = 0L)
-      .collect().map(_.toSeq).toSet
-    assert(rows.map(_.toSeq).toSet == dist)
   }
 
   test("term pmi: hand-computed fixed-point scores; corpus rows ranked and above floor") {
