@@ -84,12 +84,6 @@ object C {
     if (rows.length < cap) Some(rows) else None
   }
 
-  /** 60-bit stable content hash: first 15 hex digits of md5, as a Long.
-    * DuckDB twin: `CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`.
-    * Used wherever both engines must agree on a hash (fingerprints,
-    * minhash seeds, LSH buckets) — Spark's murmur `hash()` has no DuckDB
-    * equivalent.
-    */
   /** Harness-side block reclamation between queries: `clearCache()` drops
     * persisted DataFrames but NOT eager-localCheckpoint RDD blocks (those
     * are reclaimed by the ContextCleaner when the plan is GC'd — which is
@@ -112,6 +106,12 @@ object C {
     System.gc()
   }
 
+  /** 60-bit stable content hash: first 15 hex digits of md5, as a Long.
+    * DuckDB twin: `CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)`.
+    * Used wherever both engines must agree on a hash (fingerprints,
+    * minhash seeds, LSH buckets) — Spark's murmur `hash()` has no DuckDB
+    * equivalent.
+    */
   def md5Long(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast(LongType)
 

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   *  - [[knnBruteForce]]: broadcast the (small) query set against every
   *    vector — the exact baseline.
   *  - [[knnIvf]]: IVF-style coarse quantization. Centroid assignment is a
-  *    PURE MAP: the centroid set is collapsed into one sorted array row,
-  *    broadcast, and the argmax runs as an `aggregate()` fold expression —
-  *    zero shuffle, no window sort (the round-1 form paid a full
-  *    shuffle+sort of N×nlist rows for the same argmax).
+  *    PURE MAP: the centroid set is collapsed into one array row,
+  *    broadcast, and every bucket, probe list and cluster comes from one
+  *    [[graft.functions.NearestCentroids]] call per vector ([[nearest]]) —
+  *    zero shuffle, no window sort, constant code size at any k.
   *  - [[dedupEmbedding]]: EXACT all-pairs above threshold. Exactness is
   *    inherently O(N²) on this data — measured at sf0.1 the embedding
   *    corpus is isotropic (median per-vector max cosine ≈ 0.40 vs the 0.45
@@ -44,8 +44,8 @@ import org.apache.spark.sql.functions._
   */
 object Knn {
 
-  private val NumQueries = 8
-  private val K = 10
+  private[graft] val NumQueries = 8
+  private[graft] val K = 10
 
   /** ADC shortlist size ([[knnQuantized]] / [[knnIvfAdc]]) — declared with
     * the other interpolated constants because Scala object vals initialize
@@ -281,107 +281,34 @@ object Knn {
        |SELECT query_id, rank, neighbor_id, cos_sim
        |FROM ranked WHERE rank <= $K ORDER BY query_id, rank""".stripMargin
 
-  /** One-row DataFrame holding the centroid set as a label-sorted array of
-    * (lbl, cvec, cnrm) structs — broadcast-joined so centroid probing is a
-    * per-row expression instead of a shuffle. Centroids are `nlist`
-    * deterministic seed vectors (vec_id 0..nlist-1 — a k-means iteration
-    * would slot in the same place).
-    */
-  private def centroidArray(e: DataFrame, nlist: Int): DataFrame =
-    e.filter(col("vec_id") < nlist)
-      .agg(sort_array(collect_list(struct(
-        col("vec_id").as("lbl"), col("embedding").as("cvec"), col("nrm").as("cnrm"))))
-        .as("cents"))
+  /** (lbl, cvec, cnrm) centroid rows: the first `nl` vectors of `e` by id
+    * — the deterministic seed rule every IVF path, embedding dedup and
+    * DuckDB twin share (a k-means iteration slots in the same place). */
+  private def seedCents(e: DataFrame, nl: Int): DataFrame =
+    e.filter(col("vec_id") < nl)
+      .select(col("vec_id").as("lbl"), col("embedding").as("cvec"), col("nrm").as("cnrm"))
 
-  /** cosine(embedding, c.cvec) for a centroid-struct expression. */
-  private def simTo(c: Column): Column =
-    dot(col("embedding"), c.getField("cvec")) / (col("nrm") * c.getField("cnrm"))
-
-  /** Projects per-centroid cosine columns `sim0..sim{nlist-1}` onto a frame
-    * carrying (embedding, nrm, cents). Each sim is one codegen'd
-    * [[graft.functions.FloatVecDot]] against a fixed array slot, evaluated
-    * once per row; the label-selection expressions below reference these
-    * columns (more than once), so Catalyst keeps the projection separate
-    * instead of inlining a dot product per reference.
-    *
-    * This replaced an interpreted higher-order form
-    * (`aggregate` fold for argmax, `transform`+`sort_array`+`slice` for
-    * multi-probe): HOF lambdas run on the interpreted expression path per
-    * row per element — the exact pathology [[graft.functions.FloatVecDot]]
-    * was built to remove from the dot product itself.
-    */
-  private def withSims(df: DataFrame, nlist: Int): DataFrame =
-    df.select(col("*") +: (1 to nlist).map(i =>
-      simTo(element_at(col("cents"), i)).as(s"sim${i - 1}")): _*)
-
-  /** Best centroid label among those not in `exclude`, as a codegen'd
-    * `greatest()` over `struct(sim, -lbl)`: max sim, ties to the lowest
-    * label — identical ordering to `ORDER BY sim DESC, lbl`. Expects the
-    * [[withSims]] columns. Excluded labels are masked below any real
-    * cosine (-3 < -1 ≤ cos). Pure expression — zero shuffles at any size.
-    */
-  private def bestLabel(nlist: Int, exclude: Seq[Column] = Nil): Column = {
-    val cands = (1 to nlist).map { i =>
-      val lbl = element_at(col("cents"), i).getField("lbl")
-      val s =
-        if (exclude.isEmpty) col(s"sim${i - 1}")
-        else when(exclude.map(_ === lbl).reduce(_ || _), lit(-3d))
-          .otherwise(col(s"sim${i - 1}"))
-      struct(s.as("s"), (-lbl).as("nl"))
-    }
-    -greatest(cands: _*).getField("nl")
-  }
-
-  /** Cosine to the [[bestLabel]] centroid — the same `greatest()` over
-    * `struct(sim, -lbl)`, reading the sim field instead of the label, so
-    * the (label, sim) pair is consistent under ties by construction.
-    * Expects the [[withSims]] columns.
-    */
-  private def bestSim(nlist: Int): Column =
-    greatest((1 to nlist).map { i =>
-      val lbl = element_at(col("cents"), i).getField("lbl")
-      struct(col(s"sim${i - 1}").as("s"), (-lbl).as("nl"))
-    }: _*).getField("s")
-
-  /** Adds `probes` (array of the `nprobe` best labels, best first): one
-    * [[bestLabel]] round per probe, each masking the labels already chosen,
-    * each materialized as its own column so the expression tree stays
-    * linear in nprobe. Expects the [[withSims]] columns.
-    */
-  private def withProbes(df: DataFrame, nlist: Int, nprobe: Int): DataFrame =
-    (0 until nprobe).foldLeft(df) { (d, k) =>
-      d.withColumn(s"pl$k", bestLabel(nlist, (0 until k).map(j => col(s"pl$j"))))
-    }.withColumn("probes", array((0 until nprobe).map(k => col(s"pl$k")): _*))
-
-  /** Per-label centroid rows → the 1-row sorted-array form the probing
-    * expressions consume. */
+  /** Per-label centroid rows → one row holding them as the `cents` array
+    * [[nearest]] reads — broadcast-joined, so assignment and probing are a
+    * per-row expression instead of a shuffle. Entry order is free: the
+    * kernel orders by (sim, lbl) itself. */
   private def toCentroidArray(rows: DataFrame): DataFrame =
-    rows.agg(sort_array(collect_list(struct(
-      col("lbl"), col("cvec"), col("cnrm")))).as("cents"))
+    rows.agg(collect_list(struct(col("lbl"), col("cvec"), col("cnrm"))).as("cents"))
 
-  /** (vec_id, lbl, sim) PAIR ROWS: broadcast nested-loop of the nlist
-    * centroid rows against the corpus, one codegen'd [[dot]] per pair —
-    * the assignment shape for CORPUS-SIZED nlist (⌈√N⌉). The
-    * [[withSims]] expression-column form is O(nlist) columns wide and
-    * the probe expressions over it collapse multiplicatively under
-    * CollapseProject: Janino's 64 KB method limit trips at nlist ≈ 8 and
-    * the optimizer heap-dies walking the inlined tree near nlist ≈ 20
-    * (measured live). Pair rows keep the expression tree CONSTANT-size
-    * at any nlist; the N·nlist pair stream is consumed map-side by the
-    * downstream partial aggregate / window-group-limit, so nothing
-    * wider than the reduced result ever shuffles. Extra columns in
-    * `carry` ride along (e.g. the embedding for a Lloyd mean).
-    */
-  private def centroidSimRows(e: DataFrame, cents: DataFrame,
-      carry: Seq[String] = Nil): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id") +: carry.map(col) :+ col("lbl") :+
-        (dot(col("embedding"), col("cvec")) / (col("nrm") * col("cnrm"))).as("sim"): _*)
+  /** The `n` centroids of the `cents` column nearest to the row's
+    * (embedding, nrm), best first, as (lbl, sim) structs — the one
+    * nearest-centroid kernel ([[graft.functions.NearestCentroids]]): sim
+    * DESC, ties to the lowest label, the oracle's `ORDER BY sim DESC, lbl`.
+    * One static call at any k, so it is map-only and runs unchanged on a
+    * stream. */
+  private def nearest(n: Int): Column =
+    graft.functions.VecFunctions.nearestCentroids(col("embedding"), col("nrm"), col("cents"), n)
 
-  /** struct(sim, -lbl) — max of it is "highest sim, ties to the lowest
-    * label", identical ordering to [[bestLabel]]'s greatest() and to the
-    * oracle's `ORDER BY sim DESC, lbl`. */
-  private def simKey: Column = struct(col("sim").as("s"), (-col("lbl")).as("nl"))
+  /** Labels of the `nprobe` nearest centroids, best first. */
+  private def probeLabels(nprobe: Int): Column = nearest(nprobe).getField("lbl")
+
+  /** The nearest centroid's label (NULL when `cents` is empty). */
+  private def nearestLabel: Column = try_element_at(probeLabels(1), lit(1))
 
   /** Lloyd (k-means) refinement of the IVF centroids: `iters` rounds of
     * map-only nearest-centroid assignment followed by a per-(bucket,
@@ -441,15 +368,19 @@ object Knn {
     */
   private[graft] val LloydDriverMaxK = 1 << 12
 
-  /** Ascending-index double-accumulated dot product — the driver-side
-    * replica of [[graft.functions.FloatVecDot]]'s exact arithmetic. */
-  private def localDot(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
+  /** One Lloyd round's (lbl, pos, m) aggregate: each weighted rep of
+    * `repsW` (vec_id, embedding, nrm, gsz) is assigned to its nearest
+    * centroid of `cents` (lbl, cvec, cnrm), then m = Σ(x·gsz)/Σgsz per
+    * (label, dimension). The assignment has its own select: an item
+    * beside the generator would be projected above the Generate and run
+    * the kernel once per dimension instead of once per vector. */
+  private[graft] def lloydRoundMeans(repsW: DataFrame, cents: DataFrame): DataFrame =
+    repsW.crossJoin(broadcast(toCentroidArray(cents)))
+      .select(nearestLabel.as("lbl"), col("gsz"), col("embedding"))
+      .select(col("lbl"), col("gsz"), posexplode(col("embedding")).as(Seq("pos", "x")))
+      .groupBy(col("lbl"), col("pos"))
+      .agg((sum(col("x").cast("double") * col("gsz"))
+        / sum(col("gsz")).cast("double")).as("m"))
 
   /** The Lloyd rounds over an ALREADY materialized weighted-rep relation
     * (vec_id, embedding, nrm, gsz) — shared by [[trainCentroids]] (which
@@ -461,13 +392,13 @@ object Knn {
     *
     * For nlist ≤ `driverMaxK` the per-round TAIL runs on the driver off
     * the collected (lbl, pos, m) aggregate: the corpus-sized work —
-    * pair-row assignment and the per-(label, dimension) weighted mean —
+    * kernel assignment and the per-(label, dimension) weighted mean —
     * stays distributed and arithmetically UNCHANGED (the collected m is
     * the same Σ(x·gsz)/Σgsz double the distributed branch feeds its float
     * cast), and the driver replays the identical remainder: float-cast in
     * ascending pos order (sort_array on distinct pos keys = sort by pos;
     * `Double.toFloat` = Spark's double→float cast), cnrm = sqrt of the
-    * [[localDot]] replica of [[dot]], empty buckets keep their previous
+    * same [[graft.functions.FloatVecDot.dot]] loop, empty buckets keep their previous
     * centroid (the left-outer coalesce). This drops per round: the k-row
     * collect_list exchange, the centroid left-outer join, and the
     * lineage-cut checkpoint job — the §5 scheduling overhead that
@@ -477,33 +408,21 @@ object Knn {
   private[pipeline] def trainCentroidsOn(e: DataFrame, repsW: DataFrame,
       nlist: Int, iters: Int = LloydIters,
       driverMaxK: Int = LloydDriverMaxK): DataFrame = {
-    val seed = e.filter(col("vec_id") < nlist)
-      .select(col("vec_id").as("lbl"), col("embedding").as("cvec"), col("nrm").as("cnrm"))
-    def roundMeans(cents: DataFrame): DataFrame =
-      // pair rows + max_by, not the O(nlist)-wide expression form — safe
-      // at corpus-sized nlist (see centroidSimRows); each vec's pairs are
-      // partition-local, so the partial max_by collapses them pre-shuffle
-      centroidSimRows(repsW, cents, carry = Seq("embedding", "gsz"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("lbl"), col("embedding"), col("gsz")), simKey).as("b"))
-        .select(col("b.lbl").as("lbl"), col("b.gsz").as("gsz"),
-          posexplode(col("b.embedding")).as(Seq("pos", "x")))
-        .groupBy(col("lbl"), col("pos"))
-        .agg((sum(col("x").cast("double") * col("gsz"))
-          / sum(col("gsz")).cast("double")).as("m"))
+    val seed = seedCents(e, nlist)
     if (nlist <= driverMaxK) {
       val spark = e.sparkSession
       import spark.implicits._
       var rows: Array[(Long, Array[Float], Double)] = seed.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       (1 to iters).foreach { _ =>
-        val byLbl = roundMeans(rows.toSeq.toDF("lbl", "cvec", "cnrm"))
+        val byLbl = lloydRoundMeans(repsW, rows.toSeq.toDF("lbl", "cvec", "cnrm"))
           .collect().groupBy(_.getLong(0))
         rows = rows.map { case (lbl, cv, cn) =>
           byLbl.get(lbl) match {
             case Some(rs) =>
               val nv = rs.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat)
-              (lbl, nv, math.sqrt(localDot(nv, nv)))
+              val av = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(nv)
+              (lbl, nv, math.sqrt(graft.functions.FloatVecDot.dot(av, av)))
             case None => (lbl, cv, cn)
           }
         }
@@ -512,7 +431,7 @@ object Knn {
     } else {
       var rows = seed
       (1 to iters).foreach { _ =>
-        val means = roundMeans(rows)
+        val means = lloydRoundMeans(repsW, rows)
           .groupBy(col("lbl"))
           .agg(transform(
             sort_array(collect_list(struct(col("pos"), col("m")))),
@@ -563,19 +482,37 @@ object Knn {
     * stream (`StreamJobs.ivfAssignStream` — new embeddings bucket as they
     * arrive, which is how an IVF index absorbs a live corpus).
     * `centroids`: per-label (lbl, cvec, cnrm) rows, e.g. from
-    * [[trainCentroids]]. The probe width is DERIVED from the centroid
-    * frame (one count of a tiny relation), not a parameter — a caller
-    * passing an 8-centroid set against a stale nlist=4 would otherwise
-    * get silently wrong buckets for every vector nearest centroids 4-7.
+    * [[trainCentroids]]; the kernel reads their number at run time, so
+    * no probe width can go stale against the centroid set.
     */
-  def ivfAssign(embeddings: DataFrame, centroids: DataFrame): DataFrame = {
-    val nlist = centroids.count().toInt
-    withSims(withNorm(embeddings).crossJoin(broadcast(toCentroidArray(centroids))), nlist)
-      .select(col("vec_id"), bestLabel(nlist).as("bucket"))
-  }
+  def ivfAssign(embeddings: DataFrame, centroids: DataFrame): DataFrame =
+    assignClusters(embeddings, centroids).select(col("vec_id"), col("cluster").as("bucket"))
+
+  /** Every column of `e` plus its nearest-centroid `bucket` against the
+    * 1-row `cents` frame — the assigned side of every IVF search. */
+  private def bucketed(e: DataFrame, cents: DataFrame): DataFrame =
+    e.crossJoin(broadcast(cents)).select(e.columns.map(col) :+ nearestLabel.as("bucket"): _*)
+
+  /** (query_id, q, q_nrm, `carry`…, bucket): one row per query vector and
+    * each of its `nprobe` nearest buckets — the probe side of every IVF
+    * search. `cents` is the 1-row frame holding the `cents` array (and
+    * any carried column). */
+  private def probeRows(queries: DataFrame, cents: DataFrame, nprobe: Int,
+      carry: Column*): DataFrame =
+    queries.crossJoin(broadcast(cents)).select(Seq(col("vec_id").as("query_id"),
+      col("embedding").as("q"), col("nrm").as("q_nrm")) ++ carry :+
+      explode(probeLabels(nprobe)).as("bucket"): _*)
+
+  /** (query_id, neighbor_id, cos_sim) for every other vector in a probed
+    * bucket — the IVF candidate set, before ranking or a threshold. */
+  private def probeCandidates(probes: DataFrame, assigned: DataFrame): DataFrame =
+    probes.join(assigned, Seq("bucket"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        (dot(col("q"), col("embedding")) / (col("q_nrm") * col("nrm"))).as("cos_sim"))
 
   /** IVF-bucketed approximate top-k: vectors are bucketed by nearest
-    * centroid (map-only, see [[nearestLabel]]); each query probes its
+    * centroid (map-only, see [[nearest]]); each query probes its
     * `nprobe` closest buckets, pruning the scan to ~nprobe/nlist of the
     * corpus. Recall vs. brute force is property-tested (approximate ⇒ no
     * SQL oracle, rows-only check). Pass `centroids` (per-label rows, e.g.
@@ -585,22 +522,10 @@ object Knn {
   def knnIvf(embeddingsRaw: DataFrame, nlist: Int = NList, nprobe: Int = NProbe,
       centroids: Option[DataFrame] = None): DataFrame = {
     val e = withNorm(validVecs(embeddingsRaw))
-    val cents = centroids.map(toCentroidArray).getOrElse(centroidArray(e, nlist))
-    // 1-row broadcast, not a shuffle
-    val withS = withSims(e.crossJoin(broadcast(cents)), nlist)
-
-    val assigned = withS.select(
-      col("vec_id"), col("embedding"), col("nrm"), bestLabel(nlist).as("bucket"))
-
-    val probes = withProbes(withS.filter(col("vec_id") < NumQueries), nlist, nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("nrm").as("q_nrm"),
-        explode(col("probes")).as("bucket"))
-
-    broadcast(probes)
-      .join(assigned, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("q"), col("embedding")) / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+    val cents = toCentroidArray(centroids.getOrElse(seedCents(e, nlist)))
+    probeCandidates(
+        broadcast(probeRows(e.filter(col("vec_id") < NumQueries), cents, nprobe)),
+        bucketed(e, cents))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("cos_sim").desc, col("neighbor_id"))).cast("long"))
@@ -628,8 +553,7 @@ object Knn {
     val embeddings = validVecs(embeddingsRaw)
     val (cents, assigned) = ballServingIndex(embeddings, nlist)
     ballQueryAgainst(
-      embeddings.filter(col("vec_id") < NumQueries), cents, assigned,
-      tau, nlist, nprobe)
+      embeddings.filter(col("vec_id") < NumQueries), cents, assigned, tau, nprobe)
       .orderBy(col("query_id"), col("neighbor_id"))
   }
 
@@ -642,30 +566,21 @@ object Knn {
   def ballServingIndex(embeddings: DataFrame,
       nlist: Int = NList): (DataFrame, DataFrame) = {
     val e = withNorm(embeddings)
-    val cents = centroidArray(e, nlist)
-    val assigned = withSims(e.crossJoin(broadcast(cents)), nlist).select(
-      col("vec_id"), col("embedding"), col("nrm"), bestLabel(nlist).as("bucket"))
-    (cents, assigned)
+    val cents = toCentroidArray(seedCents(e, nlist))
+    (cents, bucketed(e, cents))
   }
 
   /** Radius search of arbitrary query vectors against a prebuilt
-    * [[ballServingIndex]] — stateless per query (probe selection is a
-    * per-row fold over the broadcast centroid row; candidates come from
+    * [[ballServingIndex]] — stateless per query (probe selection is one
+    * kernel call against the broadcast centroid row; candidates come from
     * the bucket equi-join), so it runs unchanged on a stream.
     */
   def ballQueryAgainst(queries: DataFrame, cents: DataFrame, assigned: DataFrame,
-      tau: Double = BallTau, nlist: Int = NList, nprobe: Int = NProbe): DataFrame = {
-    val q = withNorm(queries.select(col("vec_id"), col("embedding")))
-    val probes = withProbes(withSims(q.crossJoin(broadcast(cents)), nlist), nlist, nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("nrm").as("q_nrm"),
-        explode(col("probes")).as("bucket"))
-    probes
-      .join(assigned, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("q"), col("embedding")) / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+      tau: Double = BallTau, nprobe: Int = NProbe): DataFrame =
+    probeCandidates(
+        probeRows(withNorm(queries.select(col("vec_id"), col("embedding"))), cents, nprobe),
+        assigned)
       .filter(col("cos_sim") >= tau)
-  }
 
   /** Recall@[[K]] of the IVF index against the exact brute-force baseline —
     * the evaluation harness every production ANN deployment runs before
@@ -729,15 +644,11 @@ object Knn {
       .crossJoin(broadcast(quantizeRanges(embeddings)))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         transform(codesCol, c => (c - lit(128L)).cast("float")).as("fcodes"))
-    val cents = centroidArray(withNorm(embeddings), nlist)
-    val withS = withSims(coded.crossJoin(broadcast(cents)), nlist)
-    val assigned = withS.select(col("vec_id"), col("embedding"), col("nrm"),
-      col("fcodes"), bestLabel(nlist).as("bucket"))
-    val probes = withProbes(withS.filter(col("vec_id") < NumQueries), nlist, nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        col("nrm").as("q_nrm"), col("fcodes").as("qc"), explode(col("probes")).as("bucket"))
+    val cents = toCentroidArray(seedCents(withNorm(embeddings), nlist))
+    val probes = probeRows(coded.filter(col("vec_id") < NumQueries), cents, nprobe,
+      col("fcodes").as("qc"))
     broadcast(probes)
-      .join(assigned, Seq("bucket"))
+      .join(bucketed(coded, cents), Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("q"), col("q_nrm"),
         col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"),
@@ -929,6 +840,20 @@ object Knn {
        |  WHERE ${cosSql("a.emb", "b.emb")} >= 0.45
        |), ${expandTailSql(0.45)}""".stripMargin
 
+  /** Each vector's `nprobe` nearest centroids as (vec_id, bucket) rows —
+    * the multi-probe bucket relation every embedding dedup builds on. One
+    * [[nearest]] call per vector against the broadcast centroid array,
+    * exploded: map-only at the corpus-sized nl, so no exchange before the
+    * bucket join. Bucketing is a pure function of (vector, cents) — which
+    * is what makes the incremental probe ([[knnIncremental]]) exactly the
+    * cross-split restriction of the full pair relation under the same
+    * cents (property-tested in PipelineSpec).
+    */
+  private[graft] def multiProbe(e: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    e.crossJoin(broadcast(toCentroidArray(cents)))
+      .select(col("vec_id"), explode(probeLabels(nprobe)).as("bucket"))
+
   /** Embedding near-dup pairs, ANN candidates + exact verify — the scale
     * path: every vector lands in its `nprobe` nearest of `nlist` IVF
     * buckets (map-only multi-probe), candidate pairs share a bucket, and
@@ -942,33 +867,6 @@ object Knn {
     * (and so candidate pairs) quadratic in N; see [[adaptiveNlist]] for
     * the ×100-sweep incident and the determinism argument.
     */
-  /** Each vector's `nprobe` nearest centroids as (vec_id, bucket) rows —
-    * the multi-probe bucket relation every embedding dedup builds on.
-    * Pair rows + rank filter, not the expression probe chain — constant
-    * expression size at the corpus-sized nl (see [[centroidSimRows]]).
-    * The rn<=nprobe filter plans as WindowGroupLimit: each map partition
-    * keeps <= nprobe rows per vec BEFORE the window shuffle, so the
-    * exchange moves N*nprobe skinny rows, never N*nl. Bucketing is a
-    * pure function of (vector, cents) — which is what makes the
-    * incremental probe ([[knnIncremental]]) exactly the cross-split
-    * restriction of the full pair relation under the same cents
-    * (property-tested in PipelineSpec).
-    */
-  private[graft] def multiProbe(e: DataFrame, cents: DataFrame,
-      nprobe: Int): DataFrame =
-    centroidSimRows(e, cents)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("lbl").asc)))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id"), col("lbl").as("bucket"))
-
-  /** (lbl, cvec, cnrm) centroid rows: the first `nl` vectors of `e` by id
-    * — the deterministic seed rule every embedding dedup and its DuckDB
-    * twin share. */
-  private def seedCents(e: DataFrame, nl: Int): DataFrame =
-    e.filter(col("vec_id") < nl)
-      .select(col("vec_id").as("lbl"), col("embedding").as("cvec"), col("nrm").as("cnrm"))
-
   def dedupEmbeddingAnn(embeddingsRaw: DataFrame, threshold: Double = 0.45,
       nlist: Int = 0, nprobe: Int = NProbe): DataFrame = {
     val embeddings = validVecs(embeddingsRaw)
@@ -1182,7 +1080,7 @@ object Knn {
 
   /** Seed codebooks: subspace j's codes are the sub-vectors of the first
     * [[PqK]] vectors — the deterministic analog of k-means++ sampling,
-    * same convention as [[centroidArray]]'s seed centroids.
+    * same convention as [[seedCents]]' seed centroids.
     */
   private def pqSeeds(embeddings: DataFrame): DataFrame =
     embeddings.filter(col("vec_id") < PqK)
@@ -1272,7 +1170,7 @@ object Knn {
     // each cross-join once instead of twice). ~5 KB + nlist structs,
     // corpus-size-independent, so the checkpoint is never a scale hazard.
     val aux = pqCodebookToArray(trainPqCodebooks(embeddings))
-      .crossJoin(centroidArray(e, nlist))
+      .crossJoin(toCentroidArray(seedCents(e, nlist)))
       .localCheckpoint(eager = true)
     // One map-only pass both codes AND buckets the corpus, and the rows it
     // emits are slim — (vec_id, 8-byte codes, bucket), no embedding and no
@@ -1280,9 +1178,9 @@ object Knn {
     // nprobe × NumQueries probe rows (the broadcast side), so the scan
     // relation the ADC reads stays PqM bytes/vector at any corpus size.
     // The probes branch never touches the PQ-training subtree at all: it
-    // needs only centroid sims, computed after pruning to the query rows.
-    val assigned = withSims(withPqCodes(e.crossJoin(broadcast(aux))), nlist)
-      .select(col("vec_id"), col("pqc").as("codes"), bestLabel(nlist).as("bucket"))
+    // needs only the nearest centroids, computed after pruning to the query rows.
+    val assigned = withPqCodes(e.crossJoin(broadcast(aux)))
+      .select(col("vec_id"), col("pqc").as("codes"), nearestLabel.as("bucket"))
     // The paper's asymmetric-distance LOOKUP TABLE, materialized per probe
     // row: adctab[(j−1)·PqK + k] = round(dot(subvec_j(q), cb[j][k]) · scale)
     // — PqM × PqK dots evaluated once per (query, probe) row (16 rows here;
@@ -1299,11 +1197,7 @@ object Knn {
       round(dot(slice(col("q"), j * lit(PqSubDim) + 1, lit(PqSubDim)),
         ent.getField("cvec")) * lit(AdcScale)).cast("long")
     })
-    val probes = withProbes(
-        withSims(e.filter(col("vec_id") < NumQueries).crossJoin(broadcast(aux)), nlist),
-        nlist, nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-        col("nrm").as("q_nrm"), explode(col("probes")).as("bucket"), col("cb"))
+    val probes = probeRows(e.filter(col("vec_id") < NumQueries), aux, nprobe, col("cb"))
       .withColumn("adctab", adctab)
       .drop("cb")
     val adc = (1 to PqM).map { j =>
@@ -1798,7 +1692,7 @@ object Knn {
   /** Shared oracle tail: IVF probe + search against a `cents(lbl, c)` CTE
     * (must be defined by the caller). Assignment is `rn = 1`, probing is
     * `rn <= nprobe`, ordering `sim DESC, lbl` — the exact tie semantics of
-    * [[bestLabel]]/[[withProbes]].
+    * the [[nearest]] kernel.
     */
   private def ivfRankedCtesSql(centsCte: String): String =
     s"""${ivfProbeCtesSql(centsCte)}, scored2 AS (
@@ -1958,12 +1852,27 @@ object Knn {
     */
   private[graft] val TopicK = 8
 
+  /** (cluster, label, n) contingency relation shared by [[topicClusters]]
+    * and [[topicPurity]] — Lloyd-trained assignment (map-only against the
+    * broadcast centroid array) then one count-sized hash-agg.
+    */
+  private def topicLabelCounts(embeddings: DataFrame): DataFrame = {
+    val assigned = assignClusters(
+        embeddings.select(col("vec_id"), col("embedding"), col("label")),
+        trainCentroids(embeddings, TopicK))
+      .select(col("cluster"), col("label").cast("long").as("label"))
+    // materialized: both consumers (the top-label window and the
+    // per-cluster agg) otherwise re-run the assignment scan
+    assigned.groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
+  }
+
   /** Semantic topic clustering — the corpus-balancing report a training
     * pipeline runs before fixing mixture weights (cluster-and-rebalance /
     * cluster-based semantic dedup both start here): Lloyd-cluster the
     * embedding corpus, then per cluster report its size, label diversity,
     * and dominant source label. Reuses [[trainCentroids]] (k = [[TopicK]])
-    * and the map-only [[bestLabel]] assignment, so the whole query adds
+    * and the map-only [[assignClusters]] assignment, so the whole query adds
     * exactly one count-sized shuffle on top of training: assignment is an
     * expression against the broadcast centroid array, the (cluster, label)
     * agg is map-side combined, and the dominant-label window runs over at
@@ -1974,30 +1883,6 @@ object Knn {
     * Deterministic end to end (same argument chain as [[knnIvfTrained]]),
     * so hash-checked against the DuckDB Lloyd-CTE mirror.
     */
-  /** (cluster, label, n) contingency relation shared by [[topicClusters]]
-    * and [[topicPurity]] — Lloyd-trained assignment (map-only against the
-    * broadcast centroid array) then one count-sized hash-agg.
-    */
-  private def topicLabelCounts(embeddings: DataFrame): DataFrame = {
-    val cents = trainCentroids(embeddings, TopicK)
-    // withNorm + the label column in one map-only projection (no join)
-    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-    val assigned = withSims(e.crossJoin(broadcast(toCentroidArray(cents))), TopicK)
-      .select(col("vec_id"), col("label").cast("long").as("label"),
-        bestLabel(TopicK).as("cluster"))
-    // materialized: (1) both consumers (the top-label window and the
-    // per-cluster agg) otherwise re-run the assignment scan, and (2) the
-    // consumers' inner join on `cluster` pushes an isnotnull(bestLabel)
-    // filter all the way into the broadcast-nested-loop join CONDITION,
-    // where the 8-dot greatest() expression is evaluated on the
-    // INTERPRETED path per corpus row (measured: a ≤ k·L-row relation
-    // costing 30+ s at the ×100 replica). The checkpoint truncates the
-    // lineage so the filter has nothing to push into.
-    assigned.groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = true)
-  }
-
   def topicClusters(embeddingsRaw: DataFrame): DataFrame = {
     val embeddings = validVecs(embeddingsRaw)
     val lc = topicLabelCounts(embeddings)
@@ -2030,13 +1915,9 @@ object Knn {
     */
   def embeddingOutliers(embeddingsRaw: DataFrame): DataFrame = {
     val embeddings = validVecs(embeddingsRaw)
-    val cents = trainCentroids(embeddings, TopicK)
-    val e = withNorm(embeddings)
-    val withS = withSims(e.crossJoin(broadcast(toCentroidArray(cents))), TopicK)
-    val sims = (0 until TopicK).map(j => col(s"sim$j"))
-    withS
-      .select(col("vec_id"), bestLabel(TopicK).as("cluster"),
-        greatest(sims: _*).as("cos_sim"))
+    assignClusters(embeddings.select(col("vec_id"), col("embedding")),
+        trainCentroids(embeddings, TopicK))
+      .select(col("vec_id"), col("cluster"), col("csim").as("cos_sim"))
       .orderBy(col("cos_sim").asc, col("vec_id"))
       .limit(OutlierK)
       .withColumn("rank", row_number()
@@ -2250,35 +2131,27 @@ object Knn {
   }
 
   /** Cluster assignment against an explicit (static) centroid set, every
-    * input column preserved plus (nrm, cluster, csim) — map-only
-    * broadcast expressions, so it runs unchanged on a live stream
-    * (the [[graft.streaming.StreamJobs]] semantic-dedup / topic-report
-    * twins). Same (label, sim) tie-handling as every batch assignment
-    * ([[bestLabel]]/[[bestSim]]).
+    * input column preserved plus (nrm, cluster, csim): one [[nearest]]
+    * call per row against the broadcast centroid array — map-only at any
+    * k, so the same expression serves batch and the
+    * [[graft.streaming.StreamJobs]] IVF-ingest, topic-report and
+    * semantic-dedup twins. `centroids`: per-label (lbl, cvec, cnrm) rows.
     */
-  def assignClusters(df: DataFrame, centroids: DataFrame): DataFrame = {
-    val k = centroids.count().toInt
-    val withN = df.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
-    withSims(withN.crossJoin(broadcast(toCentroidArray(centroids))), k)
+  def assignClusters(df: DataFrame, centroids: DataFrame): DataFrame =
+    df.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+      .crossJoin(broadcast(toCentroidArray(centroids)))
+      .withColumn("best", try_element_at(nearest(1), lit(1)))
       .select(df.columns.map(col) ++ Seq(col("nrm"),
-        bestLabel(k).cast("long").as("cluster"), bestSim(k).as("csim")): _*)
-  }
+        col("best.lbl").as("cluster"), col("best.sim").as("csim")): _*)
 
   /** The clustered reference index (vec_id, embedding, nrm, cluster,
     * csim) both [[dedupSemantic]] and the streaming twin's static side
-    * build on. Batch form: pair rows + max_by (see [[centroidSimRows]])
-    * so the corpus-sized k = ⌈√N⌉ never widens the expression tree;
-    * same (sim, lbl) ordering as [[assignClusters]]'s map-only
-    * expressions, so the streaming twin's per-row assignment agrees
-    * row-for-row (parity-tested).
+    * build on — [[assignClusters]] over (vec_id, embedding), so the
+    * streaming twin's per-row assignment agrees row-for-row
+    * (parity-tested).
     */
   def semanticIndex(embeddings: DataFrame, centroids: DataFrame): DataFrame =
-    centroidSimRows(withNorm(embeddings.select(col("vec_id"), col("embedding"))),
-        centroids, carry = Seq("embedding", "nrm"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("embedding"), col("nrm"), col("lbl"), col("sim")), simKey).as("b"))
-      .select(col("vec_id"), col("b.embedding").as("embedding"), col("b.nrm").as("nrm"),
-        col("b.lbl").cast("long").as("cluster"), col("b.sim").as("csim"))
+    assignClusters(embeddings.select(col("vec_id"), col("embedding")), centroids)
 
   /** Within-cluster verified near-dup pairs (id_a < id_b, cos ≥
     * [[SemDedupTau]]) over a [[semanticIndex]] relation. The self-join

@@ -562,8 +562,8 @@ object StreamJobs {
   }
 
   /** IVF index ingestion on a live embedding stream: nearest-centroid
-    * bucket assignment against a static (trained) centroid set is a pure
-    * per-row broadcast fold — zero shuffle, zero state — so the batch
+    * bucket assignment against a static (trained) centroid set is one
+    * per-row kernel call — zero shuffle, zero state — so the batch
     * core runs unchanged; parity-tested.
     */
   def ivfAssignStream(embeddings: DataFrame, centroids: DataFrame): DataFrame =
@@ -572,7 +572,7 @@ object StreamJobs {
   /** Radius search of a live query-vector stream against the static
     * [[graft.pipeline.Knn.ballServingIndex]] — "alert on everything this
     * similar to what just arrived": probe selection is a stateless
-    * per-row fold over the broadcast centroid row, candidates come from a
+    * per-row kernel call against the broadcast centroid row, candidates come from a
     * stream-static bucket equi-join, the threshold filter is per-row.
     * Shares [[graft.pipeline.Knn.ballQueryAgainst]] with the batch form,
     * so results are equal by construction; parity-tested.

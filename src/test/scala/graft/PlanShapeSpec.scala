@@ -27,15 +27,16 @@ class PlanShapeSpec extends SparkSuite {
   test("per-group top-K queries carry the partial WindowGroupLimit rewrite") {
     // rank-filter-over-window prunes to K rows per group BEFORE the shuffle
     // (map-side), which is what keeps these linear at corpus scale.
-    // dedup_embedding_ann's multi-probe rides the same rewrite: the
-    // rn<=nprobe filter over the N×√N centroid pair rows must collapse
-    // map-side, or the probe exchange shuffles N×√N rows instead of
-    // N×nprobe (the ×100-sweep incident that forced the pair-row form)
-    for (name <- Seq("source_cap", "hot_items_topn", "hot_pages_topn", "doc_top_terms",
-        "dedup_embedding_ann")) {
+    for (name <- Seq("source_cap", "hot_items_topn", "hot_pages_topn", "doc_top_terms")) {
       assert(plan(name).contains("WindowGroupLimit"),
         s"$name lost the WindowGroupLimit rewrite")
     }
+    // dedup_embedding_ann's multi-probe is one nearest_centroids call per
+    // vector: no window (or its group limit) may rank N×√N centroid pair
+    // rows, so the probe stays map-only
+    val ann = plan("dedup_embedding_ann")
+    assert(ann.contains("nearest_centroids") && !ann.contains("Window"),
+      "dedup_embedding_ann ranks centroid pair rows instead of one kernel call per vector")
     // knn_incremental's probe prune still carries the rewrite, but since
     // the round-15 canonicalization it runs at CONSTRUCTION time (the
     // rep-probe relation is an eager checkpoint both sides of the bucket
