@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.ops.TopN
+import graft.ops.{Sliding, TopN}
 import graft.sources.ReferenceData
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -29,10 +29,8 @@ object ReferenceJobs {
 
   /** HotItems / HotItemsWithSql: top-N clicked items per 1 h / 5 min window. */
   def hotItems(userBehavior: DataFrame, n: Int = 3): DataFrame =
-    ranked(TopN.countsByWindow(
-      userBehavior.filter(col("behavior") === "pv")
-        .select(col("itemId").as("item_id"), col("ts")),
-      "item_id", "1 hour", "5 minutes"), "item_id", n)
+    ranked(Sliding.slidingCounts(userBehavior.filter(col("behavior") === "pv"),
+      Seq(col("itemId").as("item_id")), 3600, 300), "item_id", n)
 
   /** HotItemsWithSql: the same ranking through the pure SQL surface
     * (the reference's second HotItems main drives Flink Table SQL;
@@ -59,9 +57,8 @@ object ReferenceJobs {
 
   /** NetworkFlow: top-N URLs per 10 min / 5 s window over apache.log. */
   def networkFlow(apacheLog: DataFrame, n: Int = 5): DataFrame =
-    ranked(TopN.countsByWindow(
-      apacheLog.filter(col("method") === "GET").select(col("url"), col("ts")),
-      "url", "10 minutes", "5 seconds"), "url", n)
+    ranked(Sliding.slidingCounts(apacheLog.filter(col("method") === "GET"),
+      Seq(col("url")), 600, 5), "url", n)
 
   /** PageView: hourly pv count (constant key in the reference — here a
     * plain tumbling aggregate that scales out).
@@ -92,16 +89,9 @@ object ReferenceJobs {
       .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_approx"))
       .orderBy("window_start")
 
-  /** AdStatisticsByGeo: ad clicks per province, sliding 1 h / 5 s.
-    * (At corpus scale prefer the pre-agg + range-sum form —
-    * [[graft.ops.EventWindows.marketByChannelFine]] — over a 720-pane
-    * explode; the bundled 200-row file doesn't need it.)
-    */
+  /** AdStatisticsByGeo: ad clicks per province, sliding 1 h / 5 s. */
   def adStatisticsByGeo(adClicks: DataFrame): DataFrame =
-    adClicks
-      .groupBy(window(col("ts"), "1 hour", "5 seconds").as("w"), col("province"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("province"), col("cnt"))
+    Sliding.slidingCounts(adClicks, Seq(col("province")), 3600, 5)
       .orderBy("window_start", "province")
 
   /** AdAnalysisByProvinceBlack: clicks 1..threshold per (user, ad, day)

@@ -19,18 +19,19 @@ import org.apache.spark.sql.functions._
   *                               (H/MarketAnalysis/AdStatisticsByGeo.scala:33-43)
   *
   * The reference funnels several of these through a single constant-key task
-  * (e.g. PageView.scala:40 `keyBy(_._1)` on a literal). Here every variant is
-  * a plain `groupBy(window(...), keys...)` aggregate, which Spark executes as
-  * partial (map-side) + final aggregation — no single-task funnel, so the
-  * same query scales out to arbitrarily many executors.
+  * (e.g. PageView.scala:40 `keyBy(_._1)` on a literal). Here every tumbling
+  * variant is a plain `groupBy(window(...), keys...)` aggregate, which Spark
+  * executes as partial (map-side) + final aggregation — no single-task
+  * funnel, so the same query scales out to arbitrarily many executors.
   *
-  * Sliding windows use Spark's built-in `window(ts, size, slide)` generator:
-  * each row explodes into size/slide panes *after* filters and column pruning,
-  * and the per-pane partial aggregation collapses the panes back down before
-  * any shuffle, so shuffled bytes stay proportional to (#keys × #panes), not
-  * to input rows. The reference's 1 h/1 s slide (3600 panes/event,
-  * AppMarketingByChannel.scala:93) is re-parameterized to slides that give
-  * non-trivial pane counts on the month-long testdata (FIXTURES.md §B).
+  * Sliding windows go through [[Sliding.slidingCounts]]: a count per (keys,
+  * slide-sized pane) before the first shuffle, then a running sum over each
+  * active pane's entry and exit edges — no row is made per (event, window),
+  * so the cost does not grow with the window/slide ratio. The reference's
+  * 1 h/1 s slide (3600 panes, AppMarketingByChannel.scala:93) is
+  * re-parameterized to slides that give non-trivial pane counts on the
+  * month-long testdata (FIXTURES.md §B); `marketByChannelFine(events, 3600,
+  * 1)` runs the true shape.
   */
 object EventWindows {
 
@@ -221,12 +222,12 @@ object EventWindows {
       |FROM events WHERE ts IS NOT NULL
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** App-marketing counts per (channel, behavior), sliding 1 h / 10 min.
+  /** (channel, behavior, ts) rows of the app-marketing counts:
     * channel := "ch" + (props.k % 6) — six synthetic channels mirroring the
     * reference's six app stores; behavior := event_type; UNINSTALL analog
     * (`error`) filtered out as in AppMarketingByChannel.scala:88.
     */
-  def marketByChannelCore(events: DataFrame): DataFrame =
+  def channelRows(events: DataFrame): DataFrame =
     events
       .filter(col("event_type") =!= "error")
       .select(
@@ -237,11 +238,14 @@ object EventWindows {
           .as("channel"),
         col("event_type").as("behavior"),
         col("ts"))
-      .groupBy(window(col("ts"), "1 hour", "10 minutes").as("w"), col("channel"), col("behavior"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(
-        unix_timestamp(col("w.start")).as("window_start"),
-        col("channel"), col("behavior"), col("cnt"))
+
+  /** App-marketing counts per (channel, behavior) over [[channelRows]],
+    * sliding 1 h / 10 min by default.
+    */
+  def marketByChannelCore(events: DataFrame, sizeSec: Long = 3600,
+      slideSec: Long = 600): DataFrame =
+    Sliding.slidingCounts(channelRows(events), Seq(col("channel"), col("behavior")),
+      sizeSec, slideSec)
 
   def marketByChannel(events: DataFrame): DataFrame =
     marketByChannelCore(events).orderBy("window_start", "channel", "behavior")
@@ -262,49 +266,12 @@ object EventWindows {
 
   /** Fine-slide form of [[marketByChannelCore]] — sliding 1 h / 1 min
     * (60 panes per window; the reference runs 1 h / 1 s = 3600 panes,
-    * AppMarketingByChannel.scala:93). The naive plan explodes every event
-    * into window/slide panes — at a 1 s slide that is 3600 rows per event
-    * before the first shuffle, the one reference workload shape a
-    * pane-explode cannot survive.
-    *
-    * This is the SURVEY §7.4 strategy instead: tumbling pre-aggregation at
-    * slide granularity (shuffled rows ∝ keys × active panes, independent of
-    * both event volume and the window/slide ratio), then a per-key dense
-    * pane series and a RANGE-frame running sum turns panes into sliding
-    * windows with one sort per key — no pane explosion anywhere. Emitted
-    * rows are exactly the naive form's: every (key, window) with cnt > 0.
+    * AppMarketingByChannel.scala:93, which the same call runs with
+    * `slideSec = 1`).
     */
   def marketByChannelFine(events: DataFrame, windowSec: Long = 3600,
-      slideSec: Long = 60): DataFrame = {
-    require(windowSec % slideSec == 0, "window must be a multiple of slide")
-    val lag = windowSec - slideSec
-    val panes = events
-      .filter(col("event_type") =!= "error")
-      .select(
-        concat(lit("ch"), (coalesce(C.propsK(col("props")), lit(-1L)) % 6).cast("string"))
-          .as("channel"),
-        col("event_type").as("behavior"),
-        (floor(C.epochSec(col("ts")) / slideSec) * slideSec).cast("long").as("pane"))
-      .groupBy(col("channel"), col("behavior"), col("pane"))
-      .agg(count(lit(1)).as("c"))
-    // dense pane series per key: every window that contains an active pane
-    // materializes, including those whose own last pane is silent
-    val dense = panes
-      .groupBy(col("channel"), col("behavior"))
-      .agg(min(col("pane")).as("mn"), max(col("pane")).as("mx"))
-      .select(col("channel"), col("behavior"),
-        explode(sequence(col("mn"), col("mx") + lag, lit(slideSec))).as("pane"))
-    val w = Window.partitionBy(col("channel"), col("behavior"))
-      .orderBy(col("pane")).rangeBetween(-lag, 0)
-    dense
-      .join(panes, Seq("channel", "behavior", "pane"), "left_outer")
-      .withColumn("c", coalesce(col("c"), lit(0L)))
-      .withColumn("cnt", sum(col("c")).over(w))
-      .filter(col("cnt") > 0)
-      .select((col("pane") - lag).as("window_start"),
-        col("channel"), col("behavior"), col("cnt"))
-      .orderBy("window_start", "channel", "behavior")
-  }
+      slideSec: Long = 60): DataFrame =
+    marketByChannelCore(events, windowSec, slideSec).orderBy("window_start", "channel", "behavior")
 
   val marketByChannelFineSql: String =
     s"""WITH ev AS (
@@ -334,11 +301,7 @@ object EventWindows {
 
   /** Global app-marketing counts (no channel), sliding 1 h / 10 min. */
   def marketTotal(events: DataFrame): DataFrame =
-    events
-      .filter(col("event_type") =!= "error")
-      .groupBy(window(col("ts"), "1 hour", "10 minutes").as("w"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("cnt"))
+    Sliding.slidingCounts(events.filter(col("event_type") =!= "error"), Nil, 3600, 600)
       .orderBy("window_start")
 
   val marketTotalSql: String =
@@ -417,16 +380,15 @@ object EventWindows {
     * only shuffle is the windowed aggregation itself.
     */
   def adClicksByProvinceCore(events: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame =
-    events
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"))
-      .join(broadcast(customer.select(col("c_custkey"), col("c_nationkey"))),
-        col("user_id") === col("c_custkey"))
-      .join(broadcast(nation.select(col("n_nationkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(window(col("ts"), "1 hour", "20 minutes").as("w"), col("n_name").as("province"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("province"), col("cnt"))
+    Sliding.slidingCounts(
+      events
+        .filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts"))
+        .join(broadcast(customer.select(col("c_custkey"), col("c_nationkey"))),
+          col("user_id") === col("c_custkey"))
+        .join(broadcast(nation.select(col("n_nationkey"), col("n_name"))),
+          col("c_nationkey") === col("n_nationkey")),
+      Seq(col("n_name").as("province")), 3600, 1200)
 
   def adClicksByProvince(events: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame =
     adClicksByProvinceCore(events, customer, nation).orderBy("window_start", "province")

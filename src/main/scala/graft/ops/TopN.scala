@@ -15,25 +15,18 @@ import org.apache.spark.sql.functions._
   * buffers every (item, count) row in per-key ListState until a timer fires
   * (HotItems.scala:120-166). In Spark the same thing is
   * `row_number() OVER (PARTITION BY window ORDER BY cnt DESC)` on top of the
-  * windowed count: the rank shuffle moves only (#keys × #panes) aggregated
-  * rows, never raw events, and each window's ranking is independent so the
-  * partition-by parallelizes across windows (no single-task funnel).
+  * sliding count ([[Sliding.slidingCounts]]): the rank shuffle moves only
+  * the (window, key) counts, never raw events, and each window's ranking is
+  * independent so the partition-by parallelizes across windows (no
+  * single-task funnel).
   * Ties break on ascending id for cross-engine determinism.
   */
 object TopN {
 
-  /** Stage 1: count per (window pane, key) — streaming-safe (append mode
-    * finalizes each pane when the watermark passes, replacing the
-    * reference's windowEnd+ε timer barrier, SURVEY.md §2.7).
-    */
-  def countsByWindow(ev: DataFrame, key: String, size: String, slide: String): DataFrame =
-    ev.groupBy(window(col("ts"), size, slide).as("w"), col(key))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col(key), col("cnt"))
-
-  /** Stage 2: rank pre-aggregated (window_start, key, cnt) rows, keep the
-    * top n per window. Public so streaming jobs can rank finalized windows
-    * inside `foreachBatch`. Ties break on ascending key (deterministic).
+  /** Rank (window_start, key, cnt) rows — [[Sliding.slidingCounts]]'
+    * output — and keep the top n per window. Public so streaming jobs can
+    * rank finalized windows inside `foreachBatch`. Ties break on ascending
+    * key (deterministic).
     */
   def rankWindowCounts(counts: DataFrame, key: String, n: Int): DataFrame =
     counts
@@ -43,8 +36,8 @@ object TopN {
       .filter(col("rnk") <= n)
 
   private def topNByWindow(
-      ev: DataFrame, key: String, size: String, slide: String, n: Int): DataFrame =
-    rankWindowCounts(countsByWindow(ev, key, size, slide), key, n)
+      ev: DataFrame, key: String, sizeSec: Long, slideSec: Long, n: Int): DataFrame =
+    rankWindowCounts(Sliding.slidingCounts(ev, Seq(col(key)), sizeSec, slideSec), key, n)
       .orderBy(col("window_start"), col("rnk"))
 
   /** Filtered (item_id, ts) projection feeding the hot-items window. */
@@ -56,7 +49,7 @@ object TopN {
     * pv filter := event_type = 'click' (HotItems.scala:51).
     */
   def hotItems(events: DataFrame): DataFrame =
-    topNByWindow(hotItemEvents(events), "item_id", "1 hour", "15 minutes", 3)
+    topNByWindow(hotItemEvents(events), "item_id", 3600, 900, 3)
 
   val hotItemsSql: String =
     s"""WITH ev AS (
@@ -95,7 +88,7 @@ object TopN {
           concat(lit("/"), col("event_type"), lit("/"),
             (coalesce(C.propsK(col("props")), lit(-1L)) % 500).cast("string")).as("page"),
           col("ts")),
-      "page", "6 hours", "1 hour", 5)
+      "page", 21600, 3600, 5)
 
   val hotPagesSql: String =
     s"""WITH ev AS (

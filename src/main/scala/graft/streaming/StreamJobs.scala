@@ -29,30 +29,11 @@ object StreamJobs {
   def marketByChannelStream(events: DataFrame, delay: String = "1 minute"): DataFrame =
     EventWindows.marketByChannelCore(events.withWatermark("ts", delay))
 
-  /** Fine-slide sliding counts over a stream — the streaming twin of
-    * [[EventWindows.marketByChannelFine]]'s pre-aggregation strategy,
-    * expressed as two chained stateful aggregations (Spark 4 append-mode
-    * multi-agg): a tumbling slide-width pre-agg collapses events to
-    * (pane, key) rows as the watermark closes each pane, then the sliding
-    * window aggregates PANE rows — the window/slide-ratio explosion
-    * happens on keys × panes, never on events, matching the batch form's
-    * state shape. (The reference's 1 h/1 s job holds 3600 panes per event
-    * in flight; here an event is in exactly one pane.)
+  /** Fine-slide (1 h / 1 min) sliding counts over a stream: the
+    * [[EventWindows.marketByChannelFine]] core over a watermarked input.
     */
   def marketByChannelFineStream(events: DataFrame, delay: String = "1 minute"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .filter(col("event_type") =!= "error")
-      .select(
-        concat(lit("ch"), (coalesce(graft.C.propsK(col("props")), lit(-1L)) % 6).cast("string"))
-          .as("channel"),
-        col("event_type").as("behavior"), col("ts"))
-      .groupBy(window(col("ts"), "1 minute").as("pane"), col("channel"), col("behavior"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(window(col("pane"), "1 hour", "1 minute").as("w"), col("channel"), col("behavior"))
-      .agg(sum(col("c")).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"),
-        col("channel"), col("behavior"), col("cnt"))
+    EventWindows.marketByChannelCore(events.withWatermark("ts", delay), 3600, 60)
 
   /** Hourly exact UV over a stream (UniqueVisitor): streaming-safe exact
     * distinct = per-window dropDuplicates (state: one row per (window,
@@ -314,9 +295,9 @@ object StreamJobs {
     * streaming append can't sort globally).
     */
   def hotItemCountsStream(events: DataFrame, delay: String = "1 minute"): DataFrame =
-    graft.ops.TopN.countsByWindow(
+    graft.ops.Sliding.slidingCounts(
       graft.ops.TopN.hotItemEvents(events).withWatermark("ts", delay),
-      "item_id", "1 hour", "15 minutes")
+      Seq(col("item_id")), 3600, 900)
 
   /** Burst login-failure warnings over a stream (LoginFailOne semantics)
     * with event-time timers — input must carry a watermark on `ts`.

@@ -36,26 +36,27 @@ class ExtensionsSpec extends SparkSuite {
     assert(both.filter(col("native") =!= col("lambda")).count() == 0)
   }
 
+  /** `marketByChannelFine` against the Scala fold over its channel rows, with
+    * whole-stage codegen fallback off; returns the window count. */
+  private def fineMatchesFold(events: org.apache.spark.sql.DataFrame, windowSec: Long,
+      slideSec: Long): Int = {
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val rows = EventWindows.channelRows(events).select("channel", "behavior", "ts").collect().toSeq
+      val fine = EventWindows.marketByChannelFine(events, windowSec, slideSec).collect()
+        .map(r => (r.getLong(0), Seq[Any](r.getString(1), r.getString(2))) -> r.getLong(3))
+      assert(fine.toMap.size == fine.length, "a window was emitted twice")
+      assert(fine.toMap == SlidingCountsSpec.fold(rows, windowSec, slideSec))
+      fine.length
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("fine-slide range-sum form == naive pane-explode sliding window") {
-    import org.apache.spark.sql.functions._
-    val events = Tables.events(spark, sf())
-    val fine = EventWindows.marketByChannelFine(events)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    // naive form: Spark's built-in sliding window at the same 1 h / 1 min —
-    // the 60-pane explode the pre-agg + range-sum strategy replaces
-    val naive = events
-      .filter(col("event_type") =!= "error")
-      .select(
-        concat(lit("ch"), (coalesce(C.propsK(col("props")), lit(-1L)) % 6).cast("string"))
-          .as("channel"),
-        col("event_type").as("behavior"), col("ts"))
-      .groupBy(window(col("ts"), "1 hour", "1 minute").as("w"), col("channel"), col("behavior"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"),
-        col("channel"), col("behavior"), col("cnt"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    assert(fine == naive)
-    assert(fine.nonEmpty)
+    // the naive reference is the per-event fold over every window an event
+    // lies in (60 per event at 1 h / 1 min), not a pane explode in Spark
+    assert(fineMatchesFold(Tables.events(spark, sf()), 3600, 60) > 0)
   }
 
   test("fine-slide runs the reference's ACTUAL 1 h / 1 s shape (3600 panes)") {
@@ -63,34 +64,17 @@ class ExtensionsSpec extends SparkSuite {
     // The reference's AppMarketingByChannel slides 1 h windows every 1 s
     // (3600 panes/event under a pane-explode). The registered query is the
     // documented 1-min re-parameterization; this test runs the SAME
-    // operator at the true 1 s slide. The sf events span 30 days — a dense
-    // per-second pane series over that span is a test-budget problem, not
-    // an operator problem — so the real events are time-compressed 256×
-    // (span → ~2.8 h) while keeping their full key diversity, then the
-    // range-sum form is checked against Spark's built-in pane-explode
-    // sliding window at the identical 1 h / 1 s parameters.
+    // operator at the true 1 s slide. The sf events span 30 days, so they
+    // are time-compressed 256× (span → ~2.8 h) while keeping their full key
+    // diversity, and checked against the Scala fold at 1 h / 1 s.
     val raw = Tables.events(spark, sf())
     val minE = raw.agg(min(unix_timestamp(col("ts")))).head().getLong(0)
     val events = raw.withColumn("ts",
       timestamp_seconds(lit(minE) + (unix_timestamp(col("ts")) - minE) / 256))
-    val fine = EventWindows.marketByChannelFine(events, windowSec = 3600, slideSec = 1)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    val naive = events
-      .filter(col("event_type") =!= "error")
-      .select(
-        concat(lit("ch"), (coalesce(C.propsK(col("props")), lit(-1L)) % 6).cast("string"))
-          .as("channel"),
-        col("event_type").as("behavior"), col("ts"))
-      .groupBy(window(col("ts"), "1 hour", "1 second").as("w"), col("channel"), col("behavior"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("window_start"),
-        col("channel"), col("behavior"), col("cnt"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    assert(fine == naive)
-    // 3600 panes per window really materialized: each event contributes to
-    // 3600 distinct windows in the naive form, and the equal fine set holds
-    // them all without ever exploding an event
-    assert(fine.size > 100000, s"expected a dense 1 s pane series, got ${fine.size}")
+    val windows = fineMatchesFold(events, 3600, 1)
+    // the dense per-second series really materializes, without ever
+    // exploding an event
+    assert(windows > 100000, s"expected a dense 1 s pane series, got $windows")
   }
 
   test("synthetic marketing source emits well-formed rows") {

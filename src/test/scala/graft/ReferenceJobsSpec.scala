@@ -22,9 +22,22 @@ class ReferenceJobsSpec extends SparkSuite {
   private lazy val all = ReferenceJobs.runAll(spark, res)
 
   test("every file-driven reference job returns rows on its bundled input") {
-    all.foreach { case (name, df) =>
-      assert(df.count() > 0, s"$name returned no rows")
-    }
+    // codegen fallback off: a stage whose generated class does not compile
+    // fails here instead of running interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      all.foreach { case (name, df) =>
+        assert(df.count() > 0, s"$name returned no rows")
+      }
+      val clicks = graft.sources.ReferenceData
+        .readCsv(spark, s"$res/AdClickLog.csv", graft.sources.ReferenceData.adClickSchema)
+        .select("province", "ts").collect().toSeq
+      val geo = all("ad_geo").collect()
+        .map(r => (r.getLong(0), Seq[Any](r.getString(1))) -> r.getLong(2)).toMap
+      assert(geo == SlidingCountsSpec.fold(clicks, 3600, 5))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("login fail: pairs match a hand-rolled scan of LoginLog") {
@@ -87,6 +100,8 @@ class ReferenceJobsSpec extends SparkSuite {
   }
 
   test("HotItemsWithSql: SQL surface == DataFrame surface row-for-row") {
+    // the DataFrame surface counts through Sliding.slidingCounts, the SQL
+    // surface through window()'s Expand: the two agree at 12 panes
     import spark.implicits._
     val t0 = Timestamp.valueOf("2017-11-26 09:00:00").getTime / 1000
     val ub = (0 until 400).map { i =>
