@@ -16,10 +16,15 @@ import org.apache.spark.sql.types._
   */
 object C {
 
-  /** Floor-to-second epoch of a timestamp column (matches DuckDB
-    * `CAST(floor(epoch(ts)) AS BIGINT)`).
+  /** Epoch second of a timestamp column, floored to a multiple of `unitSec`
+    * (at 1, DuckDB's `CAST(floor(epoch(ts)) AS BIGINT)`; a DATE counts from
+    * its midnight). Floored on the microsecond instant, as `window()` floors:
+    * `unix_timestamp` truncates a negative sub-second instant toward 0.
     */
-  def epochSec(c: Column): Column = unix_timestamp(c)
+  def epochSec(c: Column, unitSec: Long = 1L): Column = {
+    val us = unix_micros(c.cast(TimestampType))
+    ((us - pmod(us, lit(unitSec * 1000000L))) / 1000000L).cast("long")
+  }
 
   /** Exact 2-decimal fixed-point view of a double column that was generated
     * with 2-decimal values. DuckDB twin: `CAST(x AS DECIMAL(18,2))`.

@@ -20,11 +20,28 @@ import org.apache.spark.sql.SparkSession
   *    default — at local scale, 200 partitions of tiny tasks is pure
   *    scheduler overhead. On a real cluster leave the default or size to
   *    ~2-3× total cores, and let AQE coalesce.
+  *  - `file:` paths go through `graft.io.NioLocalFileSystem` (FileSystem API)
+  *    and `graft.io.NioLocalFs` (FileContext API, which Spark's default
+  *    checkpoint manager uses). Without `libhadoop.so`, Hadoop's
+  *    `RawLocalFileSystem` forks a `chmod` for every file it creates and a
+  *    `readlink` for every path a rename checks, each for the file and for
+  *    its `.crc` companion. A FileContext create plus rename of a 1 KB file
+  *    took 22.6–23.6 ms with stock Hadoop and 0.9–1.1 ms through `graft.io`
+  *    (4-core host, JDK 17, Hadoop 3.4.2), and the state-store commit of
+  *    every micro-batch paid that per state file. The replacements do those two calls in `java.nio` and
+  *    keep everything else: `.crc` companions, Spark's state-file checksums
+  *    and the checkpoint-manager class. HDFS, S3 and every other scheme are
+  *    untouched.
   */
 object GraftSession {
 
+  /** Hadoop keys that route `file:` through `graft.io` (see above). */
+  private[graft] val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[io.NioLocalFs].getName)
+
   def builder(): SparkSession.Builder = {
-    val b = SparkSession.builder()
+    val b = SparkSession.builder().config(LocalFsConf)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Join-strategy posture for scale: NEVER auto-broadcast on static

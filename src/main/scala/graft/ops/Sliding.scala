@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.C
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,12 +40,8 @@ object Sliding {
       agg.select(unix_timestamp(col("w.start")).as("window_start") +:
         named(agg.columns.slice(1, keys.size + 1)) :+ col("cnt"): _*)
     } else {
-      // floored on the microsecond instant, as window() floors (unix_timestamp
-      // truncates a negative sub-second instant toward 0)
-      val us = unix_micros(col("ts"))
       val panes = rows.where(col("ts").isNotNull)
-        .groupBy(keys :+ ((us - pmod(us, lit(slideSec * 1000000L))) / 1000000L).cast("long")
-          .as("pane"): _*)
+        .groupBy(keys :+ C.epochSec(col("ts"), slideSec).as("pane"): _*)
         .agg(count(lit(1)).as("c"))
       val ks = named(panes.columns.dropRight(2))
       val byEdge = Window.partitionBy(ks: _*).orderBy(col("t"))

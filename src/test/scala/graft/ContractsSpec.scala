@@ -140,6 +140,21 @@ class ContractsSpec extends SparkSuite {
       ("unmatched_line", 2L), ("unmatched_line", 3L)))
   }
 
+  test("epochSec floors like its DuckDB twin, also before 1970 and on a DATE") {
+    val t0 = java.time.Instant.EPOCH
+    val instants = Seq(-1000001L, -1000000L, -999999L, -1L, 0L, 1L, 999999L, 1000000L)
+      .map(us => java.sql.Timestamp.from(t0.plusNanos(us * 1000L)))
+    val schema = StructType(Seq(StructField("ts", TimestampType), StructField("d", DateType)))
+    val rows = instants.map(Row(_, java.sql.Date.valueOf("1969-12-31"))) :+ Row(null, null)
+    val out = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+      .select(C.epochSec(col("ts")), C.epochSec(col("d"))).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1))))
+    // floor(epoch(ts)): -0.000001 s is second -1, not 0 as unix_timestamp gives
+    val want = Seq(-2L, -1L, -1L, -1L, 0L, 0L, 0L, 1L).map(s => (Some(s), Some(-86400L))) :+
+      ((None, None))
+    assert(out.toSeq == want)
+  }
+
   test("collectBelow: rows iff fewer than the cap, the input's rows, never evaluated past the cap") {
     val cap = 5L
     // n = 0 is the empty input; three partitions so the limit spans them

@@ -12,7 +12,9 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSuite {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    // the library's local file system, not all of `GraftSession.builder()`:
+    // `PlanShapeSpec` asserts static broadcasts, which `builder()` turns off
+    val s = SparkSession.builder().config(GraftSession.LocalFsConf)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

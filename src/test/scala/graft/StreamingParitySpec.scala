@@ -4,7 +4,7 @@ import graft.model._
 import graft.ops.{EventWindows, FraudDetect, OrderFlow}
 import graft.streaming.StreamJobs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import java.sql.Timestamp
 
 /** Streaming ≡ batch on the same bounded data (SURVEY.md §5.3): the
@@ -122,6 +122,30 @@ class StreamingParitySpec extends SparkSuite {
         Option(r.get(3)).map(_.asInstanceOf[Long]), r.getString(4)))
     assert(stream == batch)
     assert(batch.nonEmpty)
+  }
+
+  test("O(1) state per key: login-fail and order-timeout state rows stay flat on a replayed backlog") {
+    // the same users' events again, a month later: twice the events, same keys
+    val shift = 30L * 86400 * 1000
+    val maxId = sample.map(_.event_id).max
+    val replay = sample.map(e =>
+      e.copy(event_id = e.event_id + maxId + 1, ts = new Timestamp(e.ts.getTime + shift)))
+    type Job = Dataset[Event] => Dataset[_]
+    def stateRows(job: Job, batches: Seq[Seq[Event]]): Long = {
+      val ms = MemoryStream[Event]
+      val q = job(ms.toDS()).writeStream.format("noop").outputMode("append").start()
+      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      q.stop()
+      q.recentProgress.filter(_.stateOperators.nonEmpty).last.stateOperators.map(_.numRowsTotal).sum
+    }
+    val users = sample.map(_.user_id).distinct.size
+    for ((name, job) <- Seq[(String, Job)](
+        "loginFailStream" -> (StreamJobs.loginFailStream(_, gapSec = 3600)),
+        "orderTimeoutStream" -> (StreamJobs.orderTimeoutStream(_, timeoutSec = 3600)))) {
+      val once = stateRows(job, Seq(sample))
+      assert(once == users, name)
+      assert(stateRows(job, Seq(sample, replay)) == once, name)
+    }
   }
 
   test("as-of join machine: streaming last-touch == batch window form") {
