@@ -1,17 +1,21 @@
 package graft.jobs
 
-import graft.ops.{Sliding, TopN}
+import graft.C
+import graft.ops.{EventWindows, FraudDetect, OrderFlow, Sliding, TopN}
 import graft.sources.ReferenceData
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's 17 jobs, runnable on the reference's OWN input files and
   * parameters — the "switch engines without changing anything else" layer.
   * Each function takes a DataFrame in the reference CSV/log schema
   * ([[graft.sources.ReferenceData]]) and applies the reference job's exact
-  * window/threshold parameters; the heavy lifting is the same operator
-  * cores the oracle-checked queries run.
+  * window/threshold parameters. Each is a schema adapter: it maps the
+  * reference's columns onto the kernel an oracle-checked query over
+  * `events` runs ([[Sliding.slidingCounts]], [[EventWindows.hourly]], the
+  * [[FraudDetect]] and [[OrderFlow]] kernels), so no window algebra here
+  * escapes the oracle. [[txMatch]] keeps its own join: no registered batch
+  * query is a tagged full-outer interval join.
   *
   * Reference parameter sources (paths under /root/reference/):
   *  - HotItems 1 h / 5 min top-3 `pv`      (H/HotItemsAnalysis/HotItems.scala:51-55,108)
@@ -60,34 +64,26 @@ object ReferenceJobs {
     ranked(Sliding.slidingCounts(apacheLog.filter(col("method") === "GET"),
       Seq(col("url")), 600, 5), "url", n)
 
+  private def hourlyPv(userBehavior: DataFrame, agg: Column): DataFrame =
+    EventWindows.hourly(userBehavior.filter(col("behavior") === "pv"), agg)
+      .orderBy("window_start")
+
   /** PageView: hourly pv count (constant key in the reference — here a
     * plain tumbling aggregate that scales out).
     */
   def pageView(userBehavior: DataFrame): DataFrame =
-    userBehavior.filter(col("behavior") === "pv")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("pv_count"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("pv_count"))
-      .orderBy("window_start")
+    hourlyPv(userBehavior, count(lit(1)).as("pv_count"))
 
   /** UniqueVisitor: hourly exact distinct users. */
   def uniqueVisitor(userBehavior: DataFrame): DataFrame =
-    userBehavior.filter(col("behavior") === "pv")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(countDistinct(col("userId")).as("uv_count"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_count"))
-      .orderBy("window_start")
+    hourlyPv(userBehavior, countDistinct(col("userId")).as("uv_count"))
 
   /** UvWithBloomFilter / UvByBloomFilterWithoutRedis: hourly approximate
     * distinct users — HLL++ replaces the Redis-bitmap / Guava-Bloom
     * accumulator (designed for 1e8 users/hour, UvByBloomFilter…scala:20).
     */
   def uniqueVisitorApprox(userBehavior: DataFrame, rsd: Double = 0.02): DataFrame =
-    userBehavior.filter(col("behavior") === "pv")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(approx_count_distinct(col("userId"), rsd).as("uv_approx"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_approx"))
-      .orderBy("window_start")
+    hourlyPv(userBehavior, approx_count_distinct(col("userId"), rsd).as("uv_approx"))
 
   /** AdStatisticsByGeo: ad clicks per province, sliding 1 h / 5 s. */
   def adStatisticsByGeo(adClicks: DataFrame): DataFrame =
@@ -98,54 +94,29 @@ object ReferenceJobs {
     * pass through; click threshold+1 emits a one-time blacklist warning;
     * later clicks are dropped. Day boundaries in event time.
     */
-  def adBlacklist(adClicks: DataFrame, threshold: Long = 100): DataFrame = {
-    val days = adClicks
-      .select(col("userId"), col("adId"), col("province"), col("ts"),
-        (floor(unix_timestamp(col("ts")) / 86400) * 86400).cast("long").as("day"))
-    val w = Window.partitionBy(col("userId"), col("adId"), col("day"))
-      .orderBy(col("ts"), col("province"))
-    days
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= threshold + 1)
+  def adBlacklist(adClicks: DataFrame, threshold: Long = 100): DataFrame =
+    FraudDetect.dailyCap(adClicks.withColumn("day", C.epochSec(col("ts"), 86400)),
+        Seq("userId", "adId", "day"), "province", threshold)
       .select(
-        when(col("rn") <= threshold, lit("click")).otherwise(lit("blacklist_warning")).as("side"),
-        col("userId"), col("adId"), col("province"),
-        unix_timestamp(col("ts")).as("ts_sec"))
-  }
+        when(col("over"), lit("blacklist_warning")).otherwise(lit("click")).as("side"),
+        col("userId"), col("adId"), col("province"), col("e").as("ts_sec"))
 
   /** LoginFailTwo / LoginFailWithCep: two consecutive fails within
     * `gapSec` (strict contiguity — an intervening success resets).
     */
-  def loginFail(logins: DataFrame, gapSec: Long = 2): DataFrame = {
-    val w = Window.partitionBy(col("userId")).orderBy(col("ts"), col("ip"))
-    logins
-      .select(col("userId"), col("ip"), col("eventType"), col("ts"),
-        unix_timestamp(col("ts")).as("e"))
-      .withColumn("prev_type", lag(col("eventType"), 1).over(w))
-      .withColumn("prev_e", lag(col("e"), 1).over(w))
-      .filter(col("eventType") === "fail" && col("prev_type") === "fail"
-        && col("e") - col("prev_e") <= gapSec)
-      .select(col("userId"), col("prev_e").as("first_fail"), col("e").as("second_fail"))
-      .orderBy(col("userId"), col("second_fail"))
-  }
+  def loginFail(logins: DataFrame, gapSec: Long = 2): DataFrame =
+    FraudDetect.consecutiveFails(logins, "userId", "ip", col("eventType") === "fail", gapSec)
 
   /** OrderTimeout / OrderTimeoutWithOutCep: each created order pays within
     * 15 min, pays late, or never pays. Reversed-cumulative-min lookup, one
-    * shuffle on orderId (no self-join).
+    * shuffle on orderId (no self-join); within one second a create sorts
+    * before a pay ("create" < "pay"), whatever order the rows arrive in.
     */
-  def orderTimeout(orders: DataFrame, timeoutSec: Long = 900): DataFrame = {
-    val w = Window.partitionBy(col("orderId")).orderBy(col("ts"))
-      .rowsBetween(1, Window.unboundedFollowing)
-    orders
-      .select(col("orderId"), col("eventType"), unix_timestamp(col("ts")).as("e"), col("ts"))
-      .withColumn("pay_e", min(when(col("eventType") === "pay", col("e"))).over(w))
-      .filter(col("eventType") === "create")
-      .select(col("orderId"), col("e").as("create_ts"), col("pay_e").as("pay_ts"),
-        when(col("pay_e").isNull, lit("order timeout"))
-          .when(col("pay_e") - col("e") <= timeoutSec, lit("payed successfully"))
-          .otherwise(lit("payed but already timeout")).as("result_msg"))
+  def orderTimeout(orders: DataFrame, timeoutSec: Long = 900): DataFrame =
+    OrderFlow.nextPay(orders, "orderId", "eventType", col("eventType") === "create",
+        col("eventType") === "pay", timeoutSec)
+      .drop("eventType")
       .orderBy(col("orderId"))
-  }
 
   /** OrderPayTxMatch / OrderPayTxMatchWithJoin: pay events ⋈ receipts on
     * txId with receipt.ts ∈ [pay.ts − 3 s, pay.ts + 5 s] (the reference's

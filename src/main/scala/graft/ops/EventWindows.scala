@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.C
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,16 +35,20 @@ import org.apache.spark.sql.functions._
   */
 object EventWindows {
 
-  /** Hourly page views: tumbling 1 h count of `click` events.
-    * Core is orderBy-free so the identical plan runs under Structured
-    * Streaming append mode (graft.streaming.StreamJobs).
+  /** The one hourly tumbling aggregate: `(window_start, agg)` per 1 h
+    * event-time window of `rows` holding `agg` (an aliased aggregate), a
+    * NULL `ts` dropped. orderBy-free, so over a watermarked input the same
+    * plan runs as a Structured Streaming append-mode aggregate
+    * (graft.streaming.StreamJobs).
     */
+  def hourly(rows: DataFrame, agg: Column): DataFrame = {
+    val a = rows.groupBy(window(col("ts"), "1 hour").as("w")).agg(agg)
+    a.select(unix_timestamp(col("w.start")).as("window_start"), col(a.columns(1)))
+  }
+
+  /** Hourly page views: tumbling 1 h count of `click` events. */
   def pvHourlyCore(events: DataFrame): DataFrame =
-    events
-      .filter(col("event_type") === "click")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("pv_count"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("pv_count"))
+    hourly(events.filter(col("event_type") === "click"), count(lit(1)).as("pv_count"))
 
   def pvHourly(events: DataFrame): DataFrame =
     pvHourlyCore(events).orderBy("window_start")
@@ -57,11 +61,7 @@ object EventWindows {
 
   /** Hourly unique visitors: tumbling 1 h exact distinct users. */
   def uvHourly(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(countDistinct(col("user_id")).as("uv_count"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_count"))
-      .orderBy("window_start")
+    hourly(events, countDistinct(col("user_id")).as("uv_count")).orderBy("window_start")
 
   val uvHourlySql: String =
     // `ts IS NOT NULL` = the event-time contract: a timestamp-less row
@@ -75,14 +75,11 @@ object EventWindows {
 
   /** Hourly approximate UV via HLL++ — the scale path the reference
     * approximates with Redis-bitmap / Guava Bloom filters. Raw estimate
-    * form, shared by the streaming twin and the property tests.
+    * form, orderBy-free: the streaming twin runs it over a watermarked
+    * input, and the property tests compare it with the exact count.
     */
   def uvHourlyApproxRaw(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(approx_count_distinct(col("user_id"), 0.01).as("uv_approx"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_approx"))
-      .orderBy("window_start")
+    hourly(events, approx_count_distinct(col("user_id"), 0.01).as("uv_approx"))
 
   /** [[uvHourlyApproxRaw]] graded against the exact distinct in the same
     * aggregate, so the driver's DuckDB gate verifies the estimator: the
@@ -109,15 +106,9 @@ object EventWindows {
     // join moves 720 skinny rows. Values are unchanged — HLL++ union is
     // set-semantic, so estimating over raw events equals estimating over
     // any distinct form of them.
-    val keyed = events.select(window(col("ts"), "1 hour").as("w"), col("user_id"))
-    val est = keyed.groupBy("w")
-      .agg(approx_count_distinct(col("user_id"), rsd).as("est"))
-    val exact = keyed.groupBy("w")
-      .agg(countDistinct(col("user_id")).as("uv_exact"))
-    exact.join(est, Seq("w"))
-      .select(
-        unix_timestamp(col("w.start")).as("window_start"),
-        col("uv_exact"),
+    hourly(events, countDistinct(col("user_id")).as("uv_exact"))
+      .join(hourly(events, approx_count_distinct(col("user_id"), rsd).as("est")), "window_start")
+      .select(col("window_start"), col("uv_exact"),
         when(abs(col("est") - col("uv_exact")).cast("double")
           <= greatest(col("uv_exact") * (4 * rsd), lit(4.0)), lit(1L))
           .otherwise(lit(0L)).as("within_bound"))
@@ -136,10 +127,7 @@ object EventWindows {
     * estimate form for the property tests.
     */
   def uvHourlyBloomRaw(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.agg.BloomDistinct.bloomDistinct(col("user_id")).as("uv_bloom"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_bloom"))
+    hourly(events, graft.agg.BloomDistinct.bloomDistinct(col("user_id")).as("uv_bloom"))
       .orderBy("window_start")
 
   /** [[uvHourlyBloomRaw]] graded for the driver's DuckDB gate. The
@@ -191,7 +179,7 @@ object EventWindows {
     val keyed = events
       .where(col("ts").isNotNull && col("user_id").isNotNull)
       .select(
-        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("window_start"),
+        C.epochSec(col("ts"), 3600).as("window_start"),
         col("user_id")).distinct()
     val exact = keyed.groupBy("window_start")
       .agg(count(lit(1)).as("uv_exact"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.C
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,16 +22,26 @@ object FraudDetect {
     * per-user sequence enforces strict contiguity exactly.
     * Reference gap 2 s re-parameterized to 3600 s for the testdata density.
     */
-  def loginFailConsecutive(events: DataFrame, gapSec: Long = 3600): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), C.epochSec(col("ts")).as("e"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+  def loginFailConsecutive(events: DataFrame, gapSec: Long = 3600): DataFrame =
+    consecutiveFails(events, "user_id", "event_id", col("event_type") === "error", gapSec)
+
+  /** The consecutive-fail kernel: per `key`, in (ts, `tie`) order, each
+    * fail whose immediately preceding event is a fail at most `gapSec`
+    * earlier, as `(key, first_fail, second_fail)` epoch seconds ordered by
+    * key and second fail. `lag` over the full per-key sequence is strict
+    * contiguity: any other event between two fails breaks the pair. The
+    * order is the full-precision `ts`; epoch seconds only measure the gap.
+    */
+  def consecutiveFails(rows: DataFrame, key: String, tie: String, isFail: Column,
+      gapSec: Long): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col("ts"), col(tie))
+    rows
+      .select(col(key), col(tie), col("ts"), isFail.as("is_fail"), C.epochSec(col("ts")).as("e"))
+      .withColumn("prev_fail", lag(col("is_fail"), 1).over(w))
       .withColumn("prev_e", lag(col("e"), 1).over(w))
-      .filter(col("event_type") === "error" && col("prev_type") === "error"
-        && col("e") - col("prev_e") <= gapSec)
-      .select(col("user_id"), col("prev_e").as("first_fail"), col("e").as("second_fail"))
-      .orderBy(col("user_id"), col("second_fail"))
+      .filter(col("is_fail") && col("prev_fail") && col("e") - col("prev_e") <= gapSec)
+      .select(col(key), col("prev_e").as("first_fail"), col("e").as("second_fail"))
+      .orderBy(col(key), col("second_fail"))
   }
 
   val loginFailConsecutiveSql: String =
@@ -105,19 +115,28 @@ object FraudDetect {
   def adBlacklist(events: DataFrame, threshold: Long = 2): DataFrame = {
     val clicks = events
       .filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id"),
+      .select(col("user_id"), col("event_id"), col("ts"),
         (C.propsK(col("props")) % 3).as("ad_id"),
-        C.epochSec(col("ts")).as("e"), col("ts"))
-      .withColumn("day", (col("e") / 86400).cast("long") * 86400)
-    val w = Window.partitionBy(col("user_id"), col("ad_id"), col("day"))
-      .orderBy(col("ts"), col("event_id"))
-    clicks
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= threshold + 1)
+        ((C.epochSec(col("ts")) / 86400).cast("long") * 86400).as("day"))
+    dailyCap(clicks, Seq("user_id", "ad_id", "day"), "event_id", threshold)
       .select(
-        when(col("rn") <= threshold, lit("pass")).otherwise(lit("warn")).as("side"),
+        when(col("over"), lit("warn")).otherwise(lit("pass")).as("side"),
         col("user_id"), col("ad_id"), col("day"), col("e").as("click_ts"))
       .orderBy(col("user_id"), col("ad_id"), col("day"), col("click_ts"), col("side"))
+  }
+
+  /** The daily-cap kernel: numbers the rows of each `keys` partition (the
+    * caller's day column among them) in (ts, `tie`) order and keeps the
+    * first `threshold + 1`, as `(keys…, tie, e, over)` with `e` the epoch
+    * second and `over` true on the one row past the cap.
+    */
+  def dailyCap(rows: DataFrame, keys: Seq[String], tie: String, threshold: Long): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("ts"), col(tie))
+    rows
+      .select(keys.map(col) :+ col(tie) :+ col("ts") :+ C.epochSec(col("ts")).as("e"): _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= threshold + 1)
+      .select(keys.map(col) :+ col(tie) :+ col("e") :+ (col("rn") > threshold).as("over"): _*)
   }
 
   val adBlacklistSql: String =

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.C
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,21 +28,33 @@ object OrderFlow {
     * min over the per-user event sequence — one shuffle on user_id, no
     * self-join, scales with events/user not events².
     */
-  def orderTimeout(events: DataFrame, timeoutSec: Long = 3600): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(1, Window.unboundedFollowing)
-    events
-      .filter(col("event_type").isin("signup", "purchase"))
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), C.epochSec(col("ts")).as("e"))
-      .withColumn("next_pay", min(when(col("event_type") === "purchase", col("e"))).over(w))
-      .filter(col("event_type") === "signup")
-      .select(
-        col("event_id").as("order_id"), col("user_id"),
-        col("e").as("create_ts"), col("next_pay").as("pay_ts"),
-        when(col("next_pay").isNull, lit("order timeout"))
-          .when(col("next_pay") - col("e") <= timeoutSec, lit("payed successfully"))
-          .otherwise(lit("payed but already timeout")).as("result_msg"))
+  def orderTimeout(events: DataFrame, timeoutSec: Long = 3600): DataFrame =
+    nextPay(events, "user_id", "event_id", col("event_type") === "signup",
+        col("event_type") === "purchase", timeoutSec)
+      .select(col("event_id").as("order_id"), col("user_id"), col("create_ts"),
+        col("pay_ts"), col("result_msg"))
       .orderBy(col("order_id"))
+
+  /** The next-pay kernel: each create row of `rows`, with the epoch second
+    * of the first pay after it in its `key`'s (ts, `tie`) order, as
+    * `(key, tie, create_ts, pay_ts, result_msg)` — pay_ts NULL when none
+    * follows, and result_msg one of the three outcomes above by
+    * `timeoutSec`.
+    */
+  def nextPay(rows: DataFrame, key: String, tie: String, isCreate: Column, isPay: Column,
+      timeoutSec: Long): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col("ts"), col(tie))
+      .rowsBetween(1, Window.unboundedFollowing)
+    rows
+      .select(col(key), col(tie), col("ts"), isCreate.as("is_create"), isPay.as("is_pay"),
+        C.epochSec(col("ts")).as("e"))
+      .filter(col("is_create") || col("is_pay"))
+      .withColumn("pay_ts", min(when(col("is_pay"), col("e"))).over(w))
+      .filter(col("is_create"))
+      .select(col(key), col(tie), col("e").as("create_ts"), col("pay_ts"),
+        when(col("pay_ts").isNull, lit("order timeout"))
+          .when(col("pay_ts") - col("e") <= timeoutSec, lit("payed successfully"))
+          .otherwise(lit("payed but already timeout")).as("result_msg"))
   }
 
   val orderTimeoutSql: String =

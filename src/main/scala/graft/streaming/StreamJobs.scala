@@ -49,14 +49,11 @@ object StreamJobs {
       .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_count"))
 
   /** Hourly approximate UV over a stream (UvWithBloomFilter semantics):
-    * sub-linear state per window via HLL++ instead of Redis bitmap.
+    * sub-linear state per window via HLL++ instead of Redis bitmap — the
+    * [[EventWindows.uvHourlyApproxRaw]] core over a watermarked input.
     */
   def uvHourlyApproxStream(events: DataFrame, delay: String = "1 minute"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(approx_count_distinct(col("user_id"), 0.01).as("uv_approx"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("uv_approx"))
+    EventWindows.uvHourlyApproxRaw(events.withWatermark("ts", delay))
 
   /** Ad clicks per province over a stream (AdStatisticsByGeo) — a
     * stream-static join: the streaming events join the static broadcast
@@ -379,25 +376,18 @@ object StreamJobs {
   }
 
   /** Stream-stream event-time interval join (OrderPayTxMatchWithJoin):
-    * creates ⋈ pays on user with pay.ts ∈ [create.ts, create.ts + timeout].
-    * Both sides watermarked; Spark bounds the join state from the interval
-    * condition exactly like Flink's intervalJoin (SURVEY.md §2.8).
+    * creates ⋈ pays on user with pay.ts ∈ [create.ts, create.ts + timeout]
+    * — the `matched` rows of [[txMatchOuterStream]]. Both sides present
+    * null-rejects each side, so Catalyst plans the inner interval join;
+    * Spark bounds its state from the interval condition exactly like
+    * Flink's intervalJoin (SURVEY.md §2.8).
     */
   def txMatchStream(
       creates: DataFrame, pays: DataFrame,
-      timeoutSec: Long = 3600, delay: String = "1 minute"): DataFrame = {
-    val c = creates
-      .select(col("event_id").as("order_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", delay)
-    val p = pays
-      .select(col("event_id").as("pay_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", delay)
-    c.join(p,
-      expr(s"c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval $timeoutSec seconds"))
-      .select(col("order_id"), col("c_user").as("user_id"),
-        unix_timestamp(col("c_ts")).as("create_ts"),
-        unix_timestamp(col("p_ts")).as("pay_ts"))
-  }
+      timeoutSec: Long = 3600, delay: String = "1 minute"): DataFrame =
+    txMatchOuterStream(creates, pays, timeoutSec, delay)
+      .where(col("create_ts").isNotNull && col("pay_ts").isNotNull)
+      .select(col("order_id"), col("user_id"), col("create_ts"), col("pay_ts"))
 
   /** Stream-stream FULL-OUTER interval join — the complete form of the
     * reference's connect + CoProcessFunction pay↔receipt matcher
@@ -932,14 +922,13 @@ object StreamJobs {
     * sketch over the same window — parity-tested.
     */
   def hotItemsSketchStream(events: DataFrame, delay: String = "1 minute"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .filter(col("event_type") === "click")
-      .select(col("ts"), graft.C.propsK(col("props")).as("item_id"))
-      .filter(col("item_id").isNotNull)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(graft.agg.HeavyHitters.cmsAgg(col("item_id")).as("sketch"))
-      .select(unix_timestamp(col("w.start")).as("window_start"), col("sketch"))
+    EventWindows.hourly(
+      events
+        .withWatermark("ts", delay)
+        .filter(col("event_type") === "click")
+        .select(col("ts"), graft.C.propsK(col("props")).as("item_id"))
+        .filter(col("item_id").isNotNull),
+      graft.agg.HeavyHitters.cmsAgg(col("item_id")).as("sketch"))
 
   /** The curation funnel ([[graft.pipeline.Curation.curatePipeline]]) on a
     * live document stream — same three verdicts, re-expressed with the

@@ -155,6 +155,18 @@ class ContractsSpec extends SparkSuite {
     assert(out.toSeq == want)
   }
 
+  test("hourly buckets floor before 1970: uvHourlyBloom and uvHourly agree at 23:59:59.5") {
+    // -0.5 s: unix_timestamp truncates it to second 0 (bucket 0); window()
+    // and the DuckDB twins floor it into the hour starting at -3600
+    val schema = StructType(Seq(StructField("ts", TimestampType), StructField("user_id", LongType)))
+    val ev = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(java.sql.Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:59.500Z")), 1L))), schema)
+    val bloom = ops.EventWindows.uvHourlyBloom(ev).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val exact = ops.EventWindows.uvHourly(ev).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(bloom.toSeq == Seq((-3600L, 1L)))
+    assert(exact.toSeq == Seq((-3600L, 1L)))
+  }
+
   test("collectBelow: rows iff fewer than the cap, the input's rows, never evaluated past the cap") {
     val cap = 5L
     // n = 0 is the empty input; three partitions so the limit spans them

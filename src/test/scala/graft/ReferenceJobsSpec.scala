@@ -10,8 +10,10 @@ import java.sql.Timestamp
   * claim, checked against independently-computed expectations on the
   * collected rows. Each fixture carries the edge its test names: fail
   * pairs inside/at/over the 2 s gap, a success reset and same-second ties
-  * (LoginLog); orders paid in time, at the 900 s boundary, late, never, and
-  * a pay with an empty txId (OrderLog); receipts inside and on the
+  * (LoginLog); orders paid in time, at the 900 s boundary, late, never, a
+  * pay with an empty txId, and a pay read before its create in the same
+  * second (OrderLog); three clicks of one (user, ad) on one day
+  * (AdClickLog); receipts inside and on the
   * [pay−3 s, pay+5 s] edges, one just outside and one with no pay
   * (ReceiptLog); a URL-count tie and more than five URLs in one window
   * (apache.log).
@@ -70,6 +72,26 @@ class ReferenceJobsSpec extends SparkSuite {
       Set("payed successfully", "payed but already timeout", "order timeout")))
     assert(msgs.getOrElse("payed successfully", 0L) > 0)
     assert(msgs.size == 3, s"fixture must hit all three outcomes: $msgs")
+    // order 34750's pay line precedes its create line in the same second;
+    // (ts, eventType) order puts the create first whatever the arrival order
+    assert(out.filter(col("orderId") === 34750L).select("result_msg").collect()
+      .map(_.getString(0)).toSeq == Seq("payed successfully"))
+  }
+
+  test("ad blacklist at threshold 2 == a per-(user, ad, day) fold over AdClickLog") {
+    val clicks = graft.sources.ReferenceData
+      .readCsv(spark, s"$res/AdClickLog.csv", graft.sources.ReferenceData.adClickSchema)
+    val rows = clicks.select("userId", "adId", "province", "ts_sec").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+    val expected = rows.groupBy(r => (r._1, r._2, Math.floorDiv(r._4, 86400L))).values
+      .flatMap(_.sortBy(r => (r._4, r._3)).take(3).zipWithIndex.map { case ((u, a, p, t), i) =>
+        (if (i < 2) "click" else "blacklist_warning", u, a, p, t)
+      }).toSet
+    val got = ReferenceJobs.adBlacklist(clicks, threshold = 2).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3), r.getLong(4))).toSet
+    assert(got == expected)
+    assert(got.filter(_._1 == "blacklist_warning") ==
+      Set(("blacklist_warning", 543462L, 1715L, "beijing", 1511661600L)))
   }
 
   test("tx match: matched + unmatched_pay partitions the pay events") {
@@ -130,5 +152,20 @@ class ReferenceJobsSpec extends SparkSuite {
     assert(uv.agg(max("uv_count")).collect()(0).getLong(0) <= 50)
     val uva = ReferenceJobs.uniqueVisitorApprox(ub)
     assert(uva.count() == uv.count())
+    // exact per-hour counts against a fold; the estimate within its rsd
+    val byHour = rows.filter(_._4 == "pv").groupBy(r => Math.floorDiv(r._5, 3600L) * 3600)
+      .toSeq.sortBy(_._1)
+    val pvWant = byHour.map { case (h, rs) => (h, rs.size.toLong) }
+    val uvWant = byHour.map { case (h, rs) => (h, rs.map(_._1).distinct.size.toLong) }
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pvWant.size > 1)
+    assert(pairs(ReferenceJobs.pageView(ub)) == pvWant)
+    assert(pairs(uv) == uvWant)
+    val approx = pairs(uva)
+    assert(approx.map(_._1) == uvWant.map(_._1))
+    approx.zip(uvWant).foreach { case ((h, est), (_, exact)) =>
+      assert(math.abs(est - exact) <= 0.02 * exact, s"window $h: $est vs $exact")
+    }
   }
 }
