@@ -3,7 +3,9 @@ import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every [[SparkEntry.queries]] entry on
   * `SPARK_GRAFT_SF_DIR` and emits ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"errors":{...},"sf":...}`.
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"errors":{...},"sf":...}`,
+  * plus the host it ran on: `cpus` (the local session's cores),
+  * `max_heap_mb` (the JVM's heap limit) and `spark` (the Spark version).
   *
   * Measurement hygiene (each of these burned a round-1 bench):
   *  - queries run in sorted name order — Map iteration order made per-query
@@ -18,18 +20,15 @@ import java.nio.file.{Files, Paths}
   *    localCheckpoint blocks (the async ContextCleaner alone lags behind
   *    an 88-query marathon) so blocks don't accumulate and drive
   *    GC/heartbeat distress;
-  *  - long rpc/heartbeat timeouts so a host-disk latency burst degrades the
-  *    number instead of killing the run with RpcTimeout.
+  *  - long rpc/heartbeat timeouts (set by [[GraftSession.local]]) so a
+  *    host-disk latency burst degrades the number instead of killing the
+  *    run with RpcTimeout.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    // long timeouts: a host-disk latency burst degrades the number
-    // instead of killing the run with RpcTimeout
-    val spark = GraftSession.local(conf = Map(
-      "spark.network.timeout" -> "600s",
-      "spark.executor.heartbeatInterval" -> "60s"))
+    val spark = GraftSession.local()
     // warmup: absorb classloading + whole-stage-codegen compilation so the
     // first measured query isn't charged ~7 s of JVM startup...
     spark.range(1L << 20).selectExpr("sum(id)").collect()
@@ -102,8 +101,10 @@ object Bench {
     val errs = results.collect { case (k, _, _, Some(e)) => s""""$k":"$e"""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val host = s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""max_heap_mb":${Runtime.getRuntime.maxMemory / 1048576},"spark":"${spark.version}""""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$ps,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$ps,"errors":$errs,"sf":"$sfDir",$host}"""
     Files.writeString(Paths.get(outPath), line + "\n")
     spark.stop()
     // last stdout lines of the run — after spark.stop() so no executor
@@ -117,7 +118,7 @@ object Bench {
     // compact line: error COUNT under a distinct key (`n_errors`) so a
     // parser keying on "errors" can't read a number here and an object on
     // the full line above for the same key
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_s":$total,"n":${results.size},"n_errors":$nErr,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","total_s":$total,"n":${results.size},"n_errors":$nErr,"sf":"$sfDir",$host}""")
     if (results.exists(_._4.isDefined)) sys.exit(1)
   }
 }

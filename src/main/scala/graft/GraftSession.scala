@@ -36,7 +36,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Hadoop keys that route `file:` through `graft.io` (see above). */
-  private[graft] val LocalFsConf: Map[String, String] = Map(
+  private val LocalFsConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[io.NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[io.NioLocalFs].getName)
 
@@ -73,16 +73,19 @@ object GraftSession {
     * `PlanDump`, `ScaleUp`): `SPARK_GRAFT_CPUS`, default 32. */
   def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-  /** Local session with this library's settings applied (tests, benches,
-    * single-node runs); `conf` adds caller-specific settings. */
-  def local(cores: Int = envCores, quiet: Boolean = true,
-      conf: Map[String, String] = Map.empty): SparkSession = {
-    val s = conf.foldLeft(builder()) { case (b, (k, v)) => b.config(k, v) }
+  /** Local session with this library's settings applied: every main, the
+    * tier-1 specs and single-node runs. Long rpc/heartbeat timeouts, so a
+    * host-disk latency burst degrades a timing instead of killing the run
+    * with `RpcTimeout`. */
+  def local(cores: Int = envCores): SparkSession = {
+    val s = builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", "false")
+      .config("spark.network.timeout", "600s")
+      .config("spark.executor.heartbeatInterval", "60s")
       .getOrCreate()
-    if (quiet) s.sparkContext.setLogLevel("WARN")
+    s.sparkContext.setLogLevel("WARN")
     s
   }
 }

@@ -117,7 +117,7 @@ object FraudDetect {
       .filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id"), col("ts"),
         (C.propsK(col("props")) % 3).as("ad_id"),
-        ((C.epochSec(col("ts")) / 86400).cast("long") * 86400).as("day"))
+        C.epochSec(col("ts"), 86400).as("day"))
     dailyCap(clicks, Seq("user_id", "ad_id", "day"), "event_id", threshold)
       .select(
         when(col("over"), lit("warn")).otherwise(lit("pass")).as("side"),
@@ -143,7 +143,7 @@ object FraudDetect {
     s"""WITH clicks AS (
        |  SELECT user_id, event_id, ${C.propsKSql} % 3 AS ad_id,
        |         ${C.epochSecSql} AS e, ts,
-       |         (${C.epochSecSql} // 86400) * 86400 AS day
+       |         CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS day
        |  FROM events WHERE event_type = 'click'
        |), numbered AS (
        |  SELECT user_id, ad_id, day, e,

@@ -193,38 +193,33 @@ object Tpch {
   /** Set difference (SURVEY.md §2.8: union/intersect/except built-in):
     * (user, day) pairs with a click but no purchase that day.
     */
-  def clickersNeverPurchased(events: DataFrame): DataFrame = {
-    def pairs(t: String) = events.filter(col("event_type") === t)
-      .select(col("user_id"), (C.epochSec(col("ts")) / 86400).cast("long").as("day"))
-      .distinct()
-    pairs("click").except(pairs("purchase")).orderBy(col("user_id"), col("day"))
-  }
+  def clickersNeverPurchased(events: DataFrame): DataFrame =
+    userDays(events, "click").except(userDays(events, "purchase"))
+      .orderBy(col("user_id"), col("day"))
 
   /** Set intersection (the `intersect` of the §2.8 union/intersect/except
     * triple): (user, day) pairs with BOTH a click and a purchase that day.
     */
-  def clickersWhoPurchased(events: DataFrame): DataFrame = {
-    def pairs(t: String) = events.filter(col("event_type") === t)
-      .select(col("user_id"), (C.epochSec(col("ts")) / 86400).cast("long").as("day"))
+  def clickersWhoPurchased(events: DataFrame): DataFrame =
+    userDays(events, "click").intersect(userDays(events, "purchase"))
+      .orderBy(col("user_id"), col("day"))
+
+  /** Distinct (user, UTC day number) pairs of one event type; the day
+    * floors, so 1969-12-31 is day −1. */
+  private def userDays(events: DataFrame, eventType: String): DataFrame =
+    events.filter(col("event_type") === eventType)
+      .select(col("user_id"), (C.epochSec(col("ts"), 86400) / 86400).cast("long").as("day"))
       .distinct()
-    pairs("click").intersect(pairs("purchase")).orderBy(col("user_id"), col("day"))
+
+  val clickersWhoPurchasedSql: String = clickerDaysSql("INTERSECT")
+
+  val clickersNeverPurchasedSql: String = clickerDaysSql("EXCEPT")
+
+  private def clickerDaysSql(setOp: String): String = {
+    def days(t: String) = "SELECT DISTINCT user_id, CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day\n" +
+      s"FROM events WHERE event_type = '$t'"
+    s"${days("click")}\n$setOp\n${days("purchase")}\nORDER BY user_id, day"
   }
-
-  val clickersWhoPurchasedSql: String =
-    """SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-      |FROM events WHERE event_type = 'click'
-      |INTERSECT
-      |SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-      |FROM events WHERE event_type = 'purchase'
-      |ORDER BY user_id, day""".stripMargin
-
-  val clickersNeverPurchasedSql: String =
-    """SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-      |FROM events WHERE event_type = 'click'
-      |EXCEPT
-      |SELECT DISTINCT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-      |FROM events WHERE event_type = 'purchase'
-      |ORDER BY user_id, day""".stripMargin
 
   /** Global ORDER BY + LIMIT (SURVEY.md §2.7): largest documents. Spark
     * executes this as a distributed TakeOrdered — per-partition top-k, no

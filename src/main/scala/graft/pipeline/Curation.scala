@@ -606,8 +606,9 @@ object Curation {
       .groupBy(col("bucket")).agg(sum(col("c") * col("gsz")).as("tc"))
     val raw = db.filter(col("lang") =!= targetLang)
       .groupBy(col("bucket")).agg(sum(col("c") * col("gsz")).as("rc"))
+    // two one-row global aggregates: the broadcast is size-bounded
     val tot = tgt.agg(sum(col("tc")).as("t_total"))
-      .crossJoin(raw.agg(sum(col("rc")).as("r_total")))
+      .crossJoin(broadcast(raw.agg(sum(col("rc")).as("r_total"))))
     // pool-doc buckets ⊆ raw-model buckets by construction, so building
     // λ over `raw` covers every bucket scoring will probe
     raw.join(tgt, Seq("bucket"), "left")

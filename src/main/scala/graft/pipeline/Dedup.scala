@@ -1269,9 +1269,17 @@ object Dedup {
         (col("e1.ga") * col("e1.gb") * col("e2.gb")).as("prod"))
       .join(repCross.select(col("a"), col("b")), Seq("a", "b"))
       .agg(coalesce(sum(col("prod")), lit(0L)).as("t3"))
-    val triStats = cliqueTri.crossJoin(mixTri).crossJoin(triTri)
+    // each global aggregate is one row, so its broadcast is size-bounded
+    val triStats = cliqueTri.crossJoin(broadcast(mixTri)).crossJoin(broadcast(triTri))
       .select((col("t1") + col("t2") + col("t3")).as("n_triangles"))
 
+    graphStatsRow(nodeStats, edgeStats, triStats)
+  }
+
+  /** The one output row of both graph-stats forms, from their three
+    * one-row aggregates. */
+  private def graphStatsRow(nodeStats: DataFrame, edgeStats: DataFrame,
+      triStats: DataFrame): DataFrame =
     nodeStats
       .crossJoin(broadcast(edgeStats))
       .crossJoin(broadcast(triStats))
@@ -1279,7 +1287,6 @@ object Dedup {
         when(col("n_wedges") > 0,
           expr("3 * n_triangles * 1000000 div n_wedges")).otherwise(0L)
           .as("gcc_ppm"))
-  }
 
   /** The naive wedge/triangle self-join form — PipelineSpec's A/B ground
     * truth for the factorized [[dedupGraphStats]] (and the shape the
@@ -1300,13 +1307,7 @@ object Dedup {
       .select(col("e1.doc_b").as("doc_a"), col("e2.doc_b").as("doc_b"))
       .join(edges, Seq("doc_a", "doc_b"))
       .agg(count(lit(1)).as("n_triangles"))
-    nodeStats
-      .crossJoin(broadcast(edgeStats))
-      .crossJoin(broadcast(triStats))
-      .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
-        when(col("n_wedges") > 0,
-          expr("3 * n_triangles * 1000000 div n_wedges")).otherwise(0L)
-          .as("gcc_ppm"))
+    graphStatsRow(nodeStats, edgeStats, triStats)
   }
 
   /** DuckDB twin of [[dedupGraphStats]] over the shared thresholded pair

@@ -80,14 +80,9 @@ object TextAnalysis {
     * already hold a rep relation, e.g. [[Dedup.dedupKeepBest]]). Every
     * output column is a pure function of the text.
     */
-  def textStatsCanonical(documents: DataFrame): DataFrame = {
-    val (_, members, reps) = Dedup.canonicalTexts(documents)
-    members
-      .join(textStats(reps).withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"))
-      .select(col("doc_id"), col("n_chars"), col("n_tokens"), col("n_stop"),
-        col("n_distinct"), col("ttr"), col("stop_ratio"), col("quality_score"))
-      .orderBy(col("doc_id"))
-  }
+  def textStatsCanonical(documents: DataFrame): DataFrame =
+    perDocCanonical(documents, textStats, Seq("n_chars", "n_tokens", "n_stop",
+      "n_distinct", "ttr", "stop_ratio", "quality_score"))
 
   val textStatsSql: String = {
     val stopList = stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
@@ -208,17 +203,12 @@ object TextAnalysis {
     // per distinct text. Token-less docs emit no row in both forms (the
     // naive posexplode produced none; the rep has no fold row and the
     // member join is inner).
-    val (_, members, reps) = Dedup.canonicalTexts(documents)
-    val repFp = reps
+    perDocCanonical(documents, reps => reps
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
       .select(col("doc_id"),
         C.md5Long(concat((col("pos") + 1).cast("string"), lit(":"), col("tok"))).as("h"))
       .groupBy(col("doc_id"))
-      .agg(expr("bit_xor(h)").as("fingerprint"))
-    members
-      .join(repFp.withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"))
-      .select(col("doc_id"), col("fingerprint"))
-      .orderBy(col("doc_id"))
+      .agg(expr("bit_xor(h)").as("fingerprint")), Seq("fingerprint"))
   }
 
   val docFingerprintSql: String =
@@ -410,12 +400,8 @@ object TextAnalysis {
     // runs once per distinct text ([[piiRedactCore]] stays the per-row
     // core the streaming twin maps). A NULL-text rep carries NULL
     // counts/redaction to every member, as the per-doc form did.
-    val (_, members, reps) = Dedup.canonicalTexts(documents)
-    members
-      .join(piiRedactCore(reps).withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"))
-      .select(col("doc_id"), col("n_emails"), col("n_phones"),
-        col("redacted"), col("n_chars_redacted"))
-      .orderBy(col("doc_id"))
+    perDocCanonical(documents, piiRedactCore,
+      Seq("n_emails", "n_phones", "redacted", "n_chars_redacted"))
   }
 
   val piiRedactSql: String =
@@ -2250,11 +2236,7 @@ object TextAnalysis {
     // cheaper polynomial hash is moot once the duplication factor is
     // collapsed out: the ~10⁹ MD5s both engines paid at the ×100 replica
     // (Spark 151 s, DuckDB 783 s) were ~99 % exact-copy re-hashing.
-    val (_, members, reps) = Dedup.canonicalTexts(documents)
-    members
-      .join(docWinnowCore(reps).withColumnRenamed("doc_id", "rep_id"), Seq("rep_id"))
-      .select(col("doc_id"), col("n_grams"), col("n_selected"), col("fp_hash"))
-      .orderBy(col("doc_id"))
+    perDocCanonical(documents, docWinnowCore, Seq("n_grams", "n_selected", "fp_hash"))
   }
 
   /** Unordered [[docWinnow]] — per-row expressions only, so it runs
@@ -2516,15 +2498,9 @@ object TextAnalysis {
     * per-doc [[htmlExtract]] on corpus + adversarial fixtures.
     */
   def htmlExtractCanonical(documents: DataFrame,
-      stopwordAxis: Boolean = false): DataFrame = {
-    val (_, members, reps) = Dedup.canonicalTexts(documents)
-    val scored = htmlExtractCore(htmlWrap(reps), stopwordAxis)
-      .withColumnRenamed("doc_id", "rep_id")
-    members.join(scored, Seq("rep_id"))
-      .select(col("doc_id"), col("n_blocks"), col("n_kept"),
-        col("clean_text"), col("n_clean_chars"))
-      .orderBy(col("doc_id"))
-  }
+      stopwordAxis: Boolean = false): DataFrame =
+    perDocCanonical(documents, reps => htmlExtractCore(htmlWrap(reps), stopwordAxis),
+      Seq("n_blocks", "n_kept", "clean_text", "n_clean_chars"))
 
   /** The regexp-battery block scorer the native
     * [[graft.functions.HtmlBlockScores]] replaced — kept as the ground

@@ -234,8 +234,8 @@ object Machines {
     var st = state.getOption.getOrElse(BlacklistState(-1L, 0L, warned = false))
     val out = Seq.newBuilder[BlacklistRow]
     sorted.foreach { case (e, _) =>
-      val sec = e.ts.getTime / 1000
-      val day = sec / 86400 * 86400
+      val sec = Math.floorDiv(e.ts.getTime, 1000L)
+      val day = Math.floorDiv(sec, 86400L) * 86400
       if (day != st.day) st = BlacklistState(day, 0L, warned = false)
       val count = st.count + 1
       if (count <= threshold)

@@ -153,6 +153,36 @@ class ContractsSpec extends SparkSuite {
     val want = Seq(-2L, -1L, -1L, -1L, 0L, 0L, 0L, 1L).map(s => (Some(s), Some(-86400L))) :+
       ((None, None))
     assert(out.toSeq == want)
+    // a day unit floors the same way: 1969-12-31 23:59:59 is in day -86400
+    val lastSec = spark.range(1).select(timestamp_seconds(lit(-1L)).as("ts"))
+    assert(lastSec.select(C.epochSec(col("ts"), 86400)).head.getLong(0) == -86400L)
+  }
+
+  test("day buckets floor before 1970: ad_blacklist, its reference adapter, the blacklist machine and the clicker days agree") {
+    // clicks at 23:59:58 and 23:59:59 on 1969-12-31 share day -86400, so at
+    // threshold 1 the second warns and the midnight click opens day 0;
+    // truncating toward zero puts all three in day 0 and drops the third
+    import spark.implicits._
+    val ts = Seq(-2L, -1L, 0L).map(s => new java.sql.Timestamp(s * 1000))
+    val want = Seq(("pass", -86400L, -2L), ("warn", -86400L, -1L), ("pass", 0L, 0L))
+    val clicks = ts.zipWithIndex.map { case (t, i) => (i.toLong, t, 7L, "click", """{"k": 1}""") }
+    // one purchase at 23:59:59: day -1 has both, day 0 only a click
+    val events = (clicks :+ ((9L, ts(1), 7L, "purchase", "{}")))
+      .toDF("event_id", "ts", "user_id", "event_type", "props")
+    assert(ops.FraudDetect.adBlacklist(events, threshold = 1).collect()
+      .map(r => (r.getString(0), r.getLong(3), r.getLong(4))).toSeq == want)
+    val ref = jobs.ReferenceJobs.adBlacklist(events.where("event_type = 'click'")
+        .selectExpr("user_id AS userId", "1L AS adId", "'p' AS province", "ts"), threshold = 1)
+      .collect().map(r => (r.getString(0), r.getLong(4))).sortBy(_._2).toSeq
+    assert(ref == Seq(("click", -2L), ("blacklist_warning", -1L), ("click", 0L)))
+    val machine = streaming.StreamJobs.blacklistStream(
+        clicks.map(c => (model.Event(c._1, c._2, c._3, c._4), 1L)).toDS(), threshold = 1)
+      .collect().map(r => (r.side, r.day, r.click_ts)).sortBy(_._3).toSeq
+    assert(machine == want)
+    def days(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(days(ops.Tpch.clickersWhoPurchased(events)) == Seq((7L, -1L)))
+    assert(days(ops.Tpch.clickersNeverPurchased(events)) == Seq((7L, 0L)))
   }
 
   test("hourly buckets floor before 1970: uvHourlyBloom and uvHourly agree at 23:59:59.5") {

@@ -39,18 +39,13 @@ class ExtensionsSpec extends SparkSuite {
   /** `marketByChannelFine` against the Scala fold over its channel rows, with
     * whole-stage codegen fallback off; returns the window count. */
   private def fineMatchesFold(events: org.apache.spark.sql.DataFrame, windowSec: Long,
-      slideSec: Long): Int = {
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val rows = EventWindows.channelRows(events).select("channel", "behavior", "ts").collect().toSeq
-      val fine = EventWindows.marketByChannelFine(events, windowSec, slideSec).collect()
-        .map(r => (r.getLong(0), Seq[Any](r.getString(1), r.getString(2))) -> r.getLong(3))
-      assert(fine.toMap.size == fine.length, "a window was emitted twice")
-      assert(fine.toMap == SlidingCountsSpec.fold(rows, windowSec, slideSec))
-      fine.length
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      slideSec: Long): Int = withoutCodegenFallback {
+    val rows = EventWindows.channelRows(events).select("channel", "behavior", "ts").collect().toSeq
+    val fine = EventWindows.marketByChannelFine(events, windowSec, slideSec).collect()
+      .map(r => (r.getLong(0), Seq[Any](r.getString(1), r.getString(2))) -> r.getLong(3))
+    assert(fine.toMap.size == fine.length, "a window was emitted twice")
+    assert(fine.toMap == SlidingCountsSpec.fold(rows, windowSec, slideSec))
+    fine.length
   }
 
   test("fine-slide range-sum form == naive pane-explode sliding window") {
@@ -149,20 +144,16 @@ class ExtensionsSpec extends SparkSuite {
     }
     Bucketing.writeBucketed(events, "events_bucketed", "user_id", 4)
     val t = Bucketing.readTable(spark, "events_bucketed")
-    // disable broadcast so the plan shows the bucketed (non-broadcast) path
-    // a large-large join would take at cluster scale
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = t.as("a").join(t.as("b"),
-        org.apache.spark.sql.functions.col("a.user_id") ===
-          org.apache.spark.sql.functions.col("b.user_id"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join should not shuffle:\n$plan")
-      assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the session broadcasts on no estimate, so the plan shows the
+    // bucketed (non-broadcast) path a large-large join takes at scale
+    val joined = t.as("a").join(t.as("b"),
+      org.apache.spark.sql.functions.col("a.user_id") ===
+        org.apache.spark.sql.functions.col("b.user_id"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"bucketed join should not shuffle:\n$plan")
+    assert(joined.count() > 0)
   }
 
   test("sessionization: streaming session_window == batch") {

@@ -68,14 +68,11 @@ class NearestCentroidsSpec extends SparkSuite {
     // the per-centroid column form overflowed Janino's 64 KB method limit
     // at k = 128 and silently ran interpreted; with fallback off, a
     // generated-code blow-up at any k fails here instead
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    withoutCodegenFallback {
       for (k <- Seq(4, 8, 64, 128); n <- Seq(1, 2, 4)) {
         withClue(s"k = $k: ")(ab(vecs, seeds(k), n))
       }
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("kernel ties and edges: duplicate centroids, signed zero, n > k, no centroids") {

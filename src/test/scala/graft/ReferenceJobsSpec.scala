@@ -24,12 +24,7 @@ class ReferenceJobsSpec extends SparkSuite {
   private lazy val all = ReferenceJobs.runAll(spark, res)
 
   test("every file-driven reference job returns rows on its bundled input") {
-    // codegen fallback off: a stage whose generated class does not compile
-    // fails here instead of running interpreted
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    withoutCodegenFallback {
       all.foreach { case (name, df) =>
         assert(df.count() > 0, s"$name returned no rows")
       }
@@ -39,7 +34,7 @@ class ReferenceJobsSpec extends SparkSuite {
       val geo = all("ad_geo").collect()
         .map(r => (r.getLong(0), Seq[Any](r.getString(1))) -> r.getLong(2)).toMap
       assert(geo == SlidingCountsSpec.fold(clicks, 3600, 5))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("login fail: pairs match a hand-rolled scan of LoginLog") {

@@ -52,10 +52,7 @@ class SlidingCountsSpec extends SparkSuite {
         fixture("a" -> sec(5), "a" -> null, (null, sec(5)), (null, sec(100)), (null, null)),
         Seq("k"), 60, 10))
 
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    withoutCodegenFallback {
       for (c <- cases) withClue(s"${c.name}: ") {
         val rows = c.rows.select((c.keys :+ "ts").map(col): _*).collect().toSeq
         val got = Sliding.slidingCounts(c.rows, c.keys.map(col), c.sizeSec, c.slideSec)
@@ -66,7 +63,7 @@ class SlidingCountsSpec extends SparkSuite {
         assert(gotMap == fold(rows, c.sizeSec, c.slideSec))
         assert(got.size >= c.minWindows)
       }
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
     val nulls = Sliding.slidingCounts(cases.last.rows, Seq(col("k")), 60, 10).collect()
     assert(nulls.map(_.getLong(2)).sum == 6 * 3, "the NULL ts row was counted")

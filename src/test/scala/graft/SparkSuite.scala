@@ -4,25 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs. */
+/** Every spec runs in the library's local session, the one the mains run. */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSuite.session
+  lazy val spark: SparkSession = GraftSession.local(4)
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
-}
 
-object SparkSuite {
-  lazy val session: SparkSession = {
-    // the library's local file system, not all of `GraftSession.builder()`:
-    // `PlanShapeSpec` asserts static broadcasts, which `builder()` turns off
-    val s = SparkSession.builder().config(GraftSession.LocalFsConf)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/spark-graft")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** Runs `body` with codegen fallback off: a stage whose generated class
+    * does not compile fails instead of silently running interpreted. */
+  def withoutCodegenFallback[T](body: => T): T = {
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -49,13 +49,6 @@ class StreamingParitySpec extends SparkSuite {
     noSentinel(spark.table(name))
   }
 
-  test("hourly PV: streaming append == batch") {
-    val batch = EventWindows.pvHourlyCore(sample.toDF()).collect().toSet
-    val stream = runStream(df => StreamJobs.pvHourlyStream(df)).collect().toSet
-    assert(stream == batch)
-    assert(batch.nonEmpty)
-  }
-
   test("hourly exact UV: streaming dropDuplicates+count == batch countDistinct") {
     val batch = EventWindows.uvHourly(sample.toDF()).collect().toSet
     val stream = runStream(df => StreamJobs.uvHourlyStream(df)).collect().toSet
@@ -222,6 +215,48 @@ class StreamingParitySpec extends SparkSuite {
     val streamMatched = out.filter(col("side") === "matched")
       .select("order_id", "pay_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamMatched == batchMatched)
+  }
+
+  test("late rows: numRowsDroppedByWatermark counts the late rows that reach the stateful operator; output == batch over the on-time rows") {
+    // the first day's events twice more under new ids, fed after the
+    // sentinel has moved the watermark months past them
+    val maxId = sample.map(_.event_id).max
+    val late = (1 to 2).flatMap(k =>
+      sample.filter(_.ts.before(Timestamp.valueOf("2024-01-02 00:00:00")))
+        .map(e => e.copy(event_id = e.event_id + k * (maxId + 1))))
+    val txSides = (es: Seq[Event]) =>
+      Seq(es.filter(_.event_type == "signup"), es.filter(_.event_type == "purchase"))
+    case class Case(name: String, route: Seq[Event] => Seq[Seq[Event]],
+        sentinels: Seq[Seq[Event]], job: Seq[DataFrame] => DataFrame,
+        keep: DataFrame => DataFrame, reaching: Long)
+    val cases = Seq(
+      // the click filter runs below the watermark, and the partial
+      // aggregate folds the late clicks to one row per hour window
+      Case("pvHourlyStream", Seq(_), Seq(Seq(sentinel)),
+        in => StreamJobs.pvHourlyStream(in.head), noSentinel,
+        late.filter(_.event_type == "click").map(e => Math.floorDiv(e.ts.getTime, 3600000L))
+          .distinct.size.toLong),
+      // the join drops each late create and pay on its own; the sentinels
+      // carry negative users, so they match nothing
+      Case("txMatchOuterStream", txSides,
+        Seq(Seq(sentinel.copy(user_id = -8L)), Seq(sentinel.copy(event_id = -2L, user_id = -9L))),
+        in => StreamJobs.txMatchOuterStream(in(0), in(1), timeoutSec = 3600),
+        _.filter("user_id >= 0"), txSides(late).map(_.size).sum.toLong))
+    for (c <- cases) {
+      val streams = c.sentinels.map(_ => MemoryStream[Event])
+      val name = s"late_${c.name}"
+      val q = c.job(streams.map(_.toDS().toDF()))
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      for (batch <- Seq(c.route(sample), c.sentinels, c.route(late))) {
+        streams.zip(batch).foreach { case (ms, rows) => ms.addData(rows) }
+        q.processAllAvailable()
+      }
+      q.stop()
+      val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+      assert(c.reaching > 0 && dropped == c.reaching, c.name)
+      val batch = c.keep(c.job(c.route(sample).map(_.toDF()))).collect().toSet
+      assert(batch.nonEmpty && c.keep(spark.table(name)).collect().toSet == batch, c.name)
+    }
   }
 
   test("assembled HotItems job: foreachBatch sink contents == batch top-N") {
